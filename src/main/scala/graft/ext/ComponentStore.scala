@@ -1,9 +1,13 @@
 package graft.ext
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Persisted CONNECTED-COMPONENTS state (VERDICT r10 #3): the dedup
   * cluster assignment — component id per doc — maintained INCREMENTALLY
@@ -29,18 +33,23 @@ import org.apache.spark.sql.types._
   * so [[merge]]'s mutation set is O(batch endpoints + touched roots)
   * by construction:
   *
-  *  1. resolve the batch's endpoint ids to their current roots —
-  *     iterated id-pruned lookups against the store ([[resolve]]),
-  *     each hop reading only the probed ids' bucket partitions;
-  *  2. contract each pair to a root pair, drop the (root, root) ones —
-  *     pairs INSIDE a known component cost nothing further;
-  *  3. run [[Dedup.connectedComponentsResult]] on the contracted
-  *     edges — a graph over touched roots, batch-sized, never corpus-
+  *  1. collect the batch's distinct (src, dst) edges to the driver in
+  *     one job — the trigger's drop edges, batch-sized;
+  *  2. resolve their endpoints to their current roots by a fixed-point
+  *     walk ([[resolve]]): one store lookup per hop, reading only the
+  *     probed ids' `bkt=` partitions (a literal partition filter) and
+  *     matching the ids through a broadcast set. `parent < id` on every
+  *     non-root row, so the walk strictly descends and ends after
+  *     chain depth + 1 hops, with no hop cap;
+  *  3. contract each edge to its root pair and union-by-min on the
+  *     driver — pairs INSIDE a known component cost nothing further;
+  *     the graph is over touched roots, batch-sized, never corpus-
   *     sized (min of merged mins = the true component minimum, so
   *     labels stay exactly the full-recompute labels);
   *  4. upsert the changed roots + new nodes: read ONLY the affected
-  *     `bkt=` partitions, patch the O(batch) rows, dynamic-partition-
-  *     overwrite those partitions back.
+  *     `bkt=` partitions, patch in the O(batch) rows (written from one
+  *     partition), dynamic-partition-overwrite those partitions back —
+  *     the one Spark write of the merge.
   *
   * Resolution chains grow by at most one hop per merge generation;
   * [[compact]] is the maintenance pass that path-compresses every
@@ -113,46 +122,79 @@ object ComponentStore {
     (out, out.agg(count(when(pred, lit(1)))).head().getLong(0))
   }
 
-  /** Resolve each id in `ids` to its current root — (id, root). Each
-    * hop reads only the probed ids' bucket partitions (broadcast key
-    * set + partition pruning on `bkt`), so a batch resolution costs
-    * O(batch × chain depth) row reads, never a store scan. Depth is
-    * bounded by merges since the last [[compact]]; `maxHops` guards
-    * against an uncompacted pathological chain. Unknown ids resolve to
-    * themselves. */
-  def resolve(ids: DataFrame, idColumn: String, path: String,
-      maxHops: Int = 50): DataFrame = {
-    val spark = ids.sparkSession
-    val b = buckets(spark, path)
-    val store = parents(spark, path)
-    var m = lazyCkpt(ids.select(col(idColumn).cast("long").as("id")).distinct()
-      .withColumn("cur", col("id")))
-    var done = false
-    var hops = 0
-    while (!done && hops < maxHops) {
-      val keys = m.select(col("cur").as("id")).distinct()
-        .withColumn("bkt", bktOf(col("id"), b))
-      val hop = store
-        .join(broadcast(keys), Seq("bkt", "id"), "left_semi")
-        .select(col("id").as("cur"), col("parent"))
-        // a root's parent = itself → next = cur → fixed point; ids
-        // absent from the store are their own roots
-        .filter(col("parent") =!= col("cur"))
-      // one job per hop: the moved-count aggregate materializes the
-      // hop's checkpoint itself (no separate isEmpty probe)
-      val (m2, moved) = matCount(m.join(broadcast(hop), Seq("cur"), "left")
-        .select(col("id"), coalesce(col("parent"), col("cur")).as("cur"),
-          (col("parent").isNotNull).as("moved")),
-        col("moved"))
-      done = moved == 0L
-      m = m2.select("id", "cur")
-      hops += 1
+  /** Spark's `pmod(hash(id), buckets)` ([[bktOf]]) computed on the
+    * driver: Murmur3 over the long with Spark's seed 42. The bucket of
+    * every id a lookup probes or a merge writes. */
+  private[ext] def bucketOf(id: Long, b: Int): Int =
+    Math.floorMod(Murmur3_x86_32.hashLong(id, 42), b)
+
+  /** Run `f` with a filter matching `id` against a driver-side id set
+    * shipped as a broadcast variable — the plan's size does not grow
+    * with the set. The broadcast is destroyed once `f` returns. */
+  private def withIds[A](spark: SparkSession, ids: Set[Long])(f: Column => A): A = {
+    val bc = spark.sparkContext.broadcast(ids)
+    try f(udf((id: Long) => bc.value.contains(id)).apply(col("id")))
+    finally bc.destroy()
+  }
+
+  /** The stored (id -> parent) rows of `ids` in ONE job: a literal
+    * partition filter on their buckets plus the broadcast id match. */
+  private def lookup(spark: SparkSession, path: String, b: Int,
+      ids: Set[Long]): Map[Long, Long] =
+    if (ids.isEmpty || !StoreMeta.fs(spark, path).exists(new Path(s"$path/parents"))) Map.empty
+    else withIds(spark, ids) { hit =>
+      parents(spark, path)
+        .filter(col("bkt").isin(ids.toSeq.map(bucketOf(_, b)).distinct.sorted: _*) && hit)
+        .select("id", "parent").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
-    if (!done)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ComponentStore.resolve hit maxHops=$maxHops before every chain " +
-          "terminated — run compact() to path-compress the forest")
-    m.select(col("id"), col("cur").as("root"))
+
+  /** Driver-side resolver shared by [[merge]], [[resolve]] and
+    * [[delete]]: every id in `ids` -> its current root, plus the ids
+    * that have a stored row. A fixed-point walk, one [[lookup]] per
+    * hop over the ids whose parent is not known yet; ids absent from
+    * the store are their own roots. Every non-root row has
+    * `parent < id`, so each hop strictly descends and the walk ends
+    * after chain depth + 1 hops — a row breaking that invariant would
+    * make the forest cyclic and is refused. */
+  private def roots(spark: SparkSession, path: String, b: Int,
+      ids: Set[Long]): (Map[Long, Long], Set[Long]) = {
+    val parentOf = mutable.HashMap.empty[Long, Long]
+    var stored = Set.empty[Long]
+    var frontier = ids
+    while (frontier.nonEmpty) {
+      val hop = lookup(spark, path, b, frontier)
+      hop.foreach { case (id, p) =>
+        if (p > id) throw new IllegalStateException(
+          s"component store at $path has parent $p > id $id — not a union-by-min forest")
+      }
+      stored ++= hop.keySet
+      frontier.foreach(id => parentOf(id) = hop.getOrElse(id, id))
+      frontier = hop.valuesIterator.filterNot(parentOf.contains).toSet
+    }
+    def root(id: Long): Long = {
+      var c = id
+      while (parentOf(c) != c) c = parentOf(c)
+      c
+    }
+    (ids.iterator.map(id => id -> root(id)).toMap, ids.filter(stored))
+  }
+
+  /** Resolve each id in `ids` to its current root — (id, root). The
+    * distinct non-null ids are collected to the driver in one job and
+    * walked to their roots by the fixed-point walk (one bucket-pruned
+    * lookup per hop, see [[roots]]), so a batch resolution costs
+    * O(batch × chain depth) row reads, never a store scan. Depth is
+    * bounded by merges since the last [[compact]]. Unknown ids resolve
+    * to themselves. */
+  def resolve(ids: DataFrame, idColumn: String, path: String): DataFrame = {
+    val spark = ids.sparkSession
+    val want = ids.select(col(idColumn).cast("long").as("id")).filter(col("id").isNotNull)
+      .collect().map(_.getLong(0)).toSet
+    val rootOf = roots(spark, path, buckets(spark, path), want)._1
+    spark.createDataFrame(
+      rootOf.toSeq.sorted.map { case (id, r) => Row(id, r) }.asJava,
+      StructType(Seq(StructField("id", LongType), StructField("root", LongType))))
   }
 
   /** Merge one batch of verified duplicate pairs into the stored
@@ -181,55 +223,62 @@ object ComponentStore {
     // dead can delete _lease/writer.json to resume immediately.
     StoreMeta.withWriterLeaseFenced(spark, path, "merge") { lease =>
 
-    val e = pairs
+    // 1. the batch's edges, one job; deduplicated on the driver
+    val edges = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-    val endpoints = ckpt(e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct())
+      .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
+    val endpoints = edges.iterator.flatMap { case (s, d) => Iterator(s, d) }.toSet
 
-    val res = ckpt(resolve(endpoints, "id", path))
-    val er = e
-      .join(res.select(col("id").as("src"), col("root").as("ra")), Seq("src"))
-      .join(res.select(col("id").as("dst"), col("root").as("rb")), Seq("dst"))
-      .select("ra", "rb").filter(col("ra") =!= col("rb")).distinct()
-    // CC over the CONTRACTED graph: touched roots only, batch-sized.
-    // Union-by-min: every stored root is the min id of its component,
-    // so min over merged roots = min over all merged members — labels
-    // stay exactly the full-recompute labels.
-    val cc = ckpt(Dedup.connectedComponents(er, "ra", "rb"))
-    val rootUpd = cc.filter(col("id") =!= col("comp"))
-      .select(col("id"), col("comp").as("parent"))
+    // 2. endpoints -> roots
+    val (rootOf, known) = roots(spark, path, b, endpoints)
 
-    val store = parents(spark, path)
-    val known = store
-      .join(broadcast(endpoints.withColumn("bkt", bktOf(col("id"), b))),
-        Seq("bkt", "id"), "left_semi")
-      .select("id")
-    val newRows = endpoints.join(broadcast(known), Seq("id"), "left_anti")
-      .join(broadcast(cc.select(col("id"), col("comp"))), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("parent"))
+    // 3. union-by-min over the CONTRACTED edges: touched roots only.
+    // Every stored root is the min id of its component, so min over
+    // merged roots = min over all merged members — labels stay exactly
+    // the full-recompute labels.
+    val up = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (up.getOrElse(r, r) != r) r = up(r)
+      var c = x
+      while (c != r) { val n = up(c); up(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (s, d) =>
+      val ra = find(rootOf(s))
+      val rb = find(rootOf(d))
+      if (ra != rb) { up(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    // 4. upserts: every root that lost a union (exactly the keys of
+    // `up`), and every new endpoint, pointing at its component's label
+    val upserts = (up.keys.toList.map(r => r -> find(r)) ++
+      endpoints.toList.filterNot(known).map(u => u -> find(u)))
+      .toMap.toSeq.sorted
 
-    val upserts = rootUpd.unionByName(newRows).dropDuplicates("id")
-      .withColumn("bkt", bktOf(col("id"), b))
-    // patch only the affected bucket partitions: keep their untouched
-    // rows, replace/insert the upserts, dynamic-overwrite those
-    // partitions (the write set names exactly the affected bkt= dirs).
-    // ckpt breaks the read-the-path-being-overwritten lineage.
-    val affected = upserts.select("bkt").distinct()
-    val kept = store.join(broadcast(affected), Seq("bkt"), "left_semi")
-      .join(broadcast(upserts.select("id")), Seq("id"), "left_anti")
-      .select("id", "parent", "bkt")
-    val (patched, nPatched) =
-      matCount(kept.unionByName(upserts.select("id", "parent", "bkt")), lit(true))
-    // fencing check LAST before the partition overwrite: a merge that
-    // wedged past its TTL and lost the lease to a new writer must NOT
-    // interleave with that writer's rewrite (VERDICT r12 #4)
-    StoreMeta.verifyLease(spark, lease)
-    if (nPatched > 0L)
-      patched.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bkt").parquet(s"$path/parents")
+    if (upserts.nonEmpty) {
+      // patch only the affected bucket partitions: keep their untouched
+      // rows, replace/insert the upserts, dynamic-overwrite those
+      // partitions (the write set names exactly the affected bkt= dirs).
+      // The staged files replace the partitions only at job commit,
+      // after every task has read them.
+      val affected = upserts.map { case (id, _) => bucketOf(id, b) }.distinct.sorted
+      withIds(spark, upserts.map(_._1).toSet) { upserted =>
+        val kept = parents(spark, path)
+          .filter(col("bkt").isin(affected: _*) && !upserted)
+          .select("id", "parent", "bkt")
+        val rows = spark.createDataFrame(
+          upserts.map { case (id, p) => Row(id, p, bucketOf(id, b)) }.asJava, parentsSchema)
+          .coalesce(1)
+        // fencing check LAST before the partition overwrite: a merge that
+        // wedged past its TTL and lost the lease to a new writer must NOT
+        // interleave with that writer's rewrite (VERDICT r12 #4)
+        StoreMeta.verifyLease(spark, lease)
+        kept.unionByName(rows).write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bkt").parquet(s"$path/parents")
+      }
+    }
 
     fs.mkdirs(new Path(s"$path/_commits"))
     fs.create(marker, true).close()

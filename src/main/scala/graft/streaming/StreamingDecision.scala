@@ -89,9 +89,13 @@ import graft.sinks.ArcaneLayout
   * store rows per bucket/cell are CAPPED (`maxBucket`/`maxCell` — the
   * same skew bounds as the stateful tiers), so the per-batch cost is
   * O(batch × cap), never O(corpus). Appends accumulate small files;
-  * [[compact]] is the maintenance pass. No driver-side collect
-  * anywhere in the flow — decisions land as a partitioned parquet
-  * table.
+  * [[compact]] is the maintenance pass. Decisions land as a
+  * partitioned parquet table; the only driver-side collect is the
+  * cluster merge's ([[graft.ext.ComponentStore.merge]], when a cluster
+  * path is set): the batch's drop edges and the roots of their
+  * endpoints — the id sets its store lookups broadcast to the
+  * executors anyway. Both are bounded by the batch: at most one edge
+  * per dropped arrival, and one root per endpoint.
   *
   * Exactly-once: decisions for batch B are written by OVERWRITE to
   * `decisions/batch=B` (replay rewrites the same rows), and store

@@ -40,20 +40,62 @@ class ComponentStoreSpec extends AnyFlatSpec with Matchers with SparkFixture {
   private val batch2 = Seq((5L, 1L), (30L, 10L), (21L, 22L), (40L, 41L))
   private val allPairs = batch0 ++ batch1 ++ batch2
 
+  // Seeded random multi-batch pair set: 200 ids, five batches of 30
+  // pairs (self-pairs included), so batches bridge each other's
+  // components in any order.
+  private val randomBatches: Seq[Seq[(Long, Long)]] = {
+    val rnd = new scala.util.Random(20261018L)
+    Seq.fill(5)(Seq.fill(30)((1L + rnd.nextInt(200), 1L + rnd.nextInt(200))))
+  }
+  private val inputs = Seq("hand-built" -> Seq(batch0, batch1, batch2),
+    "seeded random" -> randomBatches)
+
+  /** Every `parents/bkt=` partition -> (file name -> content digest). */
+  private def bucketFiles(store: String): Map[String, Map[String, String]] = {
+    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(s"$store/parents")
+    if (!fs.exists(root)) Map.empty
+    else fs.listStatus(root).filter(_.getPath.getName.startsWith("bkt=")).map { d =>
+      d.getPath.getName -> fs.listStatus(d.getPath).map { f =>
+        val in = fs.open(f.getPath)
+        val digest =
+          try java.security.MessageDigest.getInstance("SHA-256").digest(in.readAllBytes())
+          finally in.close()
+        f.getPath.getName -> digest.map("%02x".format(_)).mkString
+      }.toMap
+    }.toMap
+  }
+
   "ComponentStore" should "match a full recompute after sequential batch merges" in {
-    val store = tempDir("graft-cs-seq")
-    ComponentStore.merge(pairsDf(batch0), "a", "b", store, "b0")
-    ComponentStore.merge(pairsDf(batch1), "a", "b", store, "b1")
-    ComponentStore.merge(pairsDf(batch2), "a", "b", store, "b2")
-    stored(store) shouldBe full(allPairs)
+    inputs.foreach { case (name, batches) =>
+      withClue(s"$name batches: ") {
+        val store = tempDir("graft-cs-seq")
+        batches.zipWithIndex.foreach { case (ps, i) =>
+          ComponentStore.merge(pairsDf(ps), "a", "b", store, s"b$i")
+        }
+        val edges = batches.flatten.filter { case (a, b) => a != b }
+        stored(store) shouldBe full(edges)
+        val rows = ComponentStore.parents(spark, store).select("id", "parent")
+          .collect().map(r => r.getLong(0) -> r.getLong(1))
+        // union-by-min forest: parent < id on every non-root row
+        rows.filter { case (id, parent) => parent > id } shouldBe empty
+        // one row per endpoint ever merged
+        rows.map(_._1).toSeq.sorted shouldBe
+          edges.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+      }
+    }
   }
 
   it should "be merge-order invariant" in {
-    val store = tempDir("graft-cs-ord")
-    ComponentStore.merge(pairsDf(batch2), "a", "b", store, "b2")
-    ComponentStore.merge(pairsDf(batch0), "a", "b", store, "b0")
-    ComponentStore.merge(pairsDf(batch1), "a", "b", store, "b1")
-    stored(store) shouldBe full(allPairs)
+    inputs.foreach { case (name, batches) =>
+      withClue(s"$name batches: ") {
+        val store = tempDir("graft-cs-ord")
+        batches.zipWithIndex.reverse.foreach { case (ps, i) =>
+          ComponentStore.merge(pairsDf(ps), "a", "b", store, s"b$i")
+        }
+        stored(store) shouldBe full(batches.flatten.filter { case (a, b) => a != b })
+      }
+    }
   }
 
   it should "no-op a replayed batch key and a re-sent batch under a new key" in {
@@ -61,12 +103,21 @@ class ComponentStoreSpec extends AnyFlatSpec with Matchers with SparkFixture {
     ComponentStore.merge(pairsDf(batch0), "a", "b", store, "b0")
     ComponentStore.merge(pairsDf(batch1), "a", "b", store, "b1")
     val before = stored(store)
+    val files = bucketFiles(store)
     // marker-guarded replay: same key, different (wrong) pairs — skipped
     ComponentStore.merge(pairsDf(Seq((1L, 40L))), "a", "b", store, "b1")
     stored(store) shouldBe before
     // natural idempotence: same pairs, NEW key — every edge contracts
     // to (root, root), nothing changes
     ComponentStore.merge(pairsDf(batch1), "a", "b", store, "b1-retry")
+    stored(store) shouldBe before
+    // a batch with no pairs and one of pairs inside known components
+    // (no edge of them joins two roots) commit without writing
+    ComponentStore.merge(pairsDf(Nil), "a", "b", store, "empty")
+    ComponentStore.merge(pairsDf(Seq((3L, 1L), (12L, 10L))), "a", "b", store, "inside")
+    ComponentStore.committedBatches(spark, store) shouldBe
+      Seq("b0", "b1", "b1-retry", "empty", "inside")
+    bucketFiles(store) shouldBe files
     stored(store) shouldBe before
   }
 
@@ -155,6 +206,39 @@ class ComponentStoreSpec extends AnyFlatSpec with Matchers with SparkFixture {
         }
     }
     stored(store) shouldBe full(allPairs ++ Seq((100L, 101L)))
+  }
+
+  it should "follow an uncompacted chain of any depth to its root" in {
+    val store = tempDir("graft-cs-chain")
+    val b = ComponentStore.DefaultBuckets
+    StoreMeta.writeBucketMeta(spark, store, ComponentStore.FormatVersion, b)
+    // a 70-hop chain 170 -> 169 -> ... -> 100 (root), as the one-pair
+    // merges (170,169), (169,168), ..., (101,100) leave it uncompacted
+    val chain = (101L to 170L).map(id => (id, id - 1))
+    import spark.implicits._
+    (chain :+ ((100L, 100L))).toDF("id", "parent")
+      .withColumn("bkt", pmod(hash(col("id")), lit(b)))
+      .write.partitionBy("bkt").parquet(s"$store/parents")
+    // the tail meets an id below the chain's root: the WHOLE chain
+    // relabels to 5, no part of it may split off
+    ComponentStore.merge(pairsDf(Seq((170L, 5L))), "a", "b", store, "tail")
+    // label propagation needs about one round per hop of the 72-node
+    // path, past connectedComponents' default 20 rounds
+    val ref = Dedup.connectedComponentsResult(pairsDf(chain :+ ((170L, 5L))),
+      "a", "b", maxIter = 100)
+    ref.converged shouldBe true
+    stored(store) shouldBe ref.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ComponentStore.resolve(Seq(100L, 140L, 170L).toDF("x"), "x", store)
+      .collect().map(_.getLong(1)).toSet shouldBe Set(5L)
+  }
+
+  it should "compute the bucket of an id exactly as Spark's pmod(hash)" in {
+    val ids = (-300L to 300L) ++ Seq(Long.MinValue, Long.MaxValue, 1L << 40)
+    val b = ComponentStore.DefaultBuckets
+    import spark.implicits._
+    val want = ids.toDF("id").select(col("id"), pmod(hash(col("id")), lit(b)))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    ids.foreach(id => ComponentStore.bucketOf(id, b) shouldBe want(id))
   }
 
   behavior of "ComponentStore single-writer lease (VERDICT r11 #7)"
