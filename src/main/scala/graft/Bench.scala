@@ -247,8 +247,7 @@ object Bench {
           val runs = (1 to 2).map { pass =>
             val src = spark.readStream.schema(docsDf.schema)
               .option("maxFilesPerTrigger", "2").parquet(slice)
-            val hits = graft.streaming.StreamingDedup.nearDupStream(
-              graft.streaming.StreamingDedup.bandRows(src, "doc_id", "text"))
+            val hits = graft.streaming.StreamingDedup.nearDupStream(src, "doc_id", "text")
             val t0 = System.nanoTime()
             val q = hits.writeStream.format("noop")
               .option("checkpointLocation", s"$tmp/ckpt$pass").start()

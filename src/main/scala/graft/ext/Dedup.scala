@@ -576,11 +576,15 @@ object Dedup {
     * Algorithm: min-label propagation with pointer jumping. Each round,
     * a node takes the min of its own label and its neighbors' labels
     * (one equi-join on the edge list + one aggregate), then labels are
-    * shortcut two levels (`comp := comp(comp)` twice, self-joins), which
-    * squares the propagation distance per jump — convergence in
-    * O(log diameter) rounds instead of O(diameter). Every data operation
-    * is a distributed join/aggregate over the edge list, which is output
-    * of LSH candidate verification — metadata-sized relative to the
+    * shortcut two levels (`comp := comp(comp)` twice, self-joins).
+    * Rounds: the shortcut only follows label pointers, so it collapses
+    * chains whose labels already lead toward the minimum (an id-sorted
+    * path converges in a handful of rounds) but cannot carry a minimum
+    * against them — with the minimum at the far end of a path whose
+    * ids rise toward it, labels move about one hop per round, so the
+    * worst case is O(diameter) rounds. Every data operation is a
+    * distributed join/aggregate over the edge list, which is output of
+    * LSH candidate verification — metadata-sized relative to the
     * corpus (pairs, not documents). Intermediates are checkpointed each
     * round so lineage doesn't grow with rounds: to the RELIABLE
     * checkpoint store when the session has one configured
@@ -595,36 +599,24 @@ object Dedup {
     * (sum, count) signature means no label moved. That is one light
     * aggregate job per round where a changed-row count would cost a
     * full self-join (the sum is carried as DECIMAL(38,0): exact, and
-    * immune to overflow at any node-id/corpus scale).
+    * immune to overflow at any node-id/corpus scale). Because labels
+    * only decrease, the loop always reaches that fixed point, and this
+    * entry point runs until it does.
     *
     * Returns (id, comp): every node that appears in `pairs`, labeled
-    * with the smallest id reachable from it. Delegates to
-    * [[connectedComponentsResult]] and LOGS a warning if `maxIter` was
-    * hit before the fixed point (VERDICT r6 #3: a silent non-converged
-    * exit can hand back non-fixed-point labels on an adversarial
-    * long-diameter edge list) — callers that must act on it should use
-    * the result-carrying variant. */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20): DataFrame = {
-    val r = connectedComponentsResult(pairs, aCol, bCol, maxIter)
-    if (!r.converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents hit maxIter=$maxIter before converging " +
-          s"(${r.iterations} rounds run); labels may not be a fixed point — " +
-          "raise maxIter or use connectedComponentsResult to handle it")
-    r.labels
-  }
+    * with the smallest id reachable from it. */
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponentsResult(pairs, aCol, bCol, maxIter = Int.MaxValue).labels
 
-  /** [[connectedComponents]] outcome: the labels, whether the label
-    * propagation reached its fixed point within `maxIter`, and how many
-    * rounds ran. `converged = false` means some label may still be
-    * non-minimal (only possible on graphs whose diameter outruns
-    * 2^maxIter-ish pointer-jumped hops). */
+  /** [[connectedComponentsResult]] outcome: the labels, whether the
+    * label propagation reached its fixed point within `maxIter`, and
+    * how many rounds ran. `converged = false` means some label may
+    * still be non-minimal. */
   final case class CcResult(labels: DataFrame, converged: Boolean, iterations: Int)
 
-  /** Min-label propagation with pointer jumping, returning the
-    * convergence outcome alongside the labels (see
-    * [[connectedComponents]] for the algorithm). */
+  /** Min-label propagation with pointer jumping, stopped after at most
+    * `maxIter` rounds, returning the convergence outcome alongside the
+    * labels (see [[connectedComponents]] for the algorithm). */
   def connectedComponentsResult(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): CcResult = {
     // reliable checkpoints when the session has a checkpoint dir (the

@@ -5765,8 +5765,7 @@ object ExtQueries {
     val name = s"streaming_golden_${goldenCounter.incrementAndGet()}"
     val src = s2.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val hits = graft.streaming.StreamingDedup.nearDupStream(
-      graft.streaming.StreamingDedup.bandRows(src, "doc_id", "text"))
+    val hits = graft.streaming.StreamingDedup.nearDupStream(src, "doc_id", "text")
     val q = hits.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -5827,10 +5826,9 @@ object ExtQueries {
         org.apache.spark.sql.types.TimestampType)))
     val src = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val hits = graft.streaming.StreamingDedup.nearDupStreamTtl(
-      graft.streaming.StreamingDedup.bandRowsTs(
-        src.withWatermark("ts", "0 seconds"), "doc_id", "text", "ts"),
-      ttlMs = TtlGoldenHorizonMs)
+    val hits = graft.streaming.StreamingDedup.nearDupStream(
+      src.withWatermark("ts", "0 seconds"), "doc_id", "text",
+      graft.streaming.Retention.Ttl("ts", TtlGoldenHorizonMs))
     val q = hits.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -6005,8 +6003,8 @@ object ExtQueries {
         org.apache.spark.sql.types.BooleanType)))
     val src = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val hits = graft.streaming.StreamingDedup
-      .exactDupStreamRetract(src, "doc_id", "text", "retract")
+    val hits = graft.streaming.StreamingDedup.exactDupStream(src, "doc_id", "text",
+      graft.streaming.Retention.Retractable("retract"))
     val q = hits.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -6109,9 +6107,9 @@ object ExtQueries {
         org.apache.spark.sql.types.TimestampType)))
     val src = s2.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val hits = graft.streaming.StreamingDedup.exactDupStreamTtl(
-      src.withWatermark("ts", "0 seconds"), "doc_id", "text", "ts",
-      ttlMs = TtlGoldenHorizonMs)
+    val hits = graft.streaming.StreamingDedup.exactDupStream(
+      src.withWatermark("ts", "0 seconds"), "doc_id", "text",
+      graft.streaming.Retention.Ttl("ts", TtlGoldenHorizonMs))
     val q = hits.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -6283,9 +6281,10 @@ object ExtQueries {
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
       .select(col("doc_id").as("vec_id"), col("embedding"), col("ts"))
       .withWatermark("ts", "0 seconds")
-    val hits = graft.streaming.StreamingDedup.semanticDupStreamTtl(
-      src, "vec_id", "embedding", "ts", cents, SemScoreE4,
-      ttlMs = TtlGoldenHorizonMs, maxCell = SemTtlMaxCell)
+    val hits = graft.streaming.StreamingDedup.semanticDupStream(
+      src, "vec_id", "embedding", cents, SemScoreE4,
+      graft.streaming.Retention.Ttl("ts", TtlGoldenHorizonMs),
+      maxCell = SemTtlMaxCell)
     val q = hits.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()

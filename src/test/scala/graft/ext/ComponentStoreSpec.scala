@@ -222,12 +222,9 @@ class ComponentStoreSpec extends AnyFlatSpec with Matchers with SparkFixture {
     // the tail meets an id below the chain's root: the WHOLE chain
     // relabels to 5, no part of it may split off
     ComponentStore.merge(pairsDf(Seq((170L, 5L))), "a", "b", store, "tail")
-    // label propagation needs about one round per hop of the 72-node
-    // path, past connectedComponents' default 20 rounds
-    val ref = Dedup.connectedComponentsResult(pairsDf(chain :+ ((170L, 5L))),
-      "a", "b", maxIter = 100)
-    ref.converged shouldBe true
-    stored(store) shouldBe ref.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the reference needs about one label-propagation round per hop of
+    // this 72-node path: it must run to its fixed point
+    stored(store) shouldBe full(chain :+ ((170L, 5L)))
     ComponentStore.resolve(Seq(100L, 140L, 170L).toDF("x"), "x", store)
       .collect().map(_.getLong(1)).toSet shouldBe Set(5L)
   }

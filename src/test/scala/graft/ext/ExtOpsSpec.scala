@@ -711,10 +711,14 @@ class ExtOpsSpec extends AnyFlatSpec with Matchers with SparkFixture {
   }
 
   it should "converge on a long chain (pointer jumping, not diameter rounds)" in {
-    // a 64-node chain has diameter 63; maxIter=20 only suffices when the
-    // shortcut step actually squares the propagation distance
+    // a 64-node chain has diameter 63; 20 rounds only suffice when the
+    // shortcut step collapses label chains on this id-sorted path
+    import spark.implicits._
     val chain = (1L until 64L).map(i => (i, i + 1))
-    val got = components(chain: _*)
+    val res = Dedup.connectedComponentsResult(chain.toDF("doc_a", "doc_b"),
+      "doc_a", "doc_b", maxIter = 20)
+    res.converged shouldBe true
+    val got = res.labels.as[(Long, Long)].collect().toMap
     got.size shouldBe 64
     got.values.toSet shouldBe Set(1L)
   }

@@ -26,8 +26,7 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val hits = StreamingDedup.nearDupStream(
-      StreamingDedup.bandRows(in.toDF().toDF("doc_id", "text"), "doc_id", "text"),
-      minSigMatch = 6)
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text", minSigMatch = 6)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("near_hits")
       .option("checkpointLocation", tempDir("neardup-ckpt"))
@@ -71,7 +70,7 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     val boiler = "the same boilerplate footer text repeated on every single page here"
     val in = MemoryStream[(Long, String)]
     val hits = StreamingDedup.nearDupStream(
-      StreamingDedup.bandRows(in.toDF().toDF("doc_id", "text"), "doc_id", "text"),
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text",
       maxBucket = 5, minSigMatch = 6)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("capped_hits")
@@ -105,11 +104,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
 
   private def ttlQuery(in: MemoryStream[(Long, String, java.sql.Timestamp)],
       name: String, ttlMs: Long) = {
-    val hits = StreamingDedup.nearDupStreamTtl(
-      StreamingDedup.bandRowsTs(
-        in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
-        "doc_id", "text", "ts"),
-      ttlMs = ttlMs, minSigMatch = 6)
+    val hits = StreamingDedup.nearDupStream(
+      in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
+      "doc_id", "text", Retention.Ttl("ts", ttlMs), minSigMatch = 6)
     hits.writeStream.outputMode("append")
       .format("memory").queryName(name)
       .option("checkpointLocation", tempDir(s"$name-ckpt"))
@@ -193,11 +190,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     import s2.implicits._
     implicit val sqlCtx = s2.sqlContext
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val hits = StreamingDedup.nearDupStreamTtl(
-      StreamingDedup.bandRowsTs(
-        in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
-        "doc_id", "text", "ts"),
-      ttlMs = 3600000L, minSigMatch = 6)
+    val hits = StreamingDedup.nearDupStream(
+      in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
+      "doc_id", "text", Retention.Ttl("ts", 3600000L), minSigMatch = 6)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("rocksdb_hits")
       .option("checkpointLocation", tempDir("rocksdb-ckpt"))
@@ -230,9 +225,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val hits = StreamingDedup.exactDupStreamTtl(
+    val hits = StreamingDedup.exactDupStream(
       in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
-      "doc_id", "text", "ts", ttlMs = 600000L) // 10-minute horizon
+      "doc_id", "text", Retention.Ttl("ts", 600000L)) // 10-minute horizon
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("exact_ttl_hits")
       .option("checkpointLocation", tempDir("exactttl-ckpt"))
@@ -343,9 +338,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val hits = StreamingDedup.exactDupStreamTtl(
+    val hits = StreamingDedup.exactDupStream(
       in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
-      "doc_id", "text", "ts", ttlMs = 600000L) // 10-minute horizon
+      "doc_id", "text", Retention.Ttl("ts", 600000L)) // 10-minute horizon
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("owner_ttl_hits")
       .option("checkpointLocation", tempDir("ownerttl-ckpt"))
@@ -399,9 +394,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
       val src = s2.readStream
         .schema("doc_id LONG, text STRING, ts TIMESTAMP")
         .option("maxFilesPerTrigger", "1").parquet(inDir)
-      StreamingDedup.exactDupStreamTtl(
+      StreamingDedup.exactDupStream(
           src.withWatermark("ts", "0 seconds"),
-          "doc_id", "text", "ts", ttlMs = 3600000L)
+          "doc_id", "text", Retention.Ttl("ts", 3600000L))
         .toDF()
         .writeStream.outputMode("append")
         .format("parquet").option("path", outDir)
@@ -553,10 +548,10 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)]
-    val hits = StreamingDedup.semanticDupStreamTtl(
+    val hits = StreamingDedup.semanticDupStream(
       in.toDF().toDF("vec_id", "embedding", "ts").withWatermark("ts", "0 seconds"),
-      "vec_id", "embedding", "ts", semCents, minScoreE4 = 3000L,
-      ttlMs = 600000L, maxCell = 2) // 10-minute horizon, 2-member cells
+      "vec_id", "embedding", semCents, minScoreE4 = 3000L,
+      retention = Retention.Ttl("ts", 600000L), maxCell = 2) // 10-minute horizon, 2-member cells
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("sem_ttl_hits")
       .option("checkpointLocation", tempDir("semttl-ckpt"))
@@ -600,10 +595,10 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
     import s2.implicits._
     implicit val sqlCtx = s2.sqlContext
     val in = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)]
-    val hits = StreamingDedup.semanticDupStreamTtl(
+    val hits = StreamingDedup.semanticDupStream(
       in.toDF().toDF("vec_id", "embedding", "ts").withWatermark("ts", "0 seconds"),
-      "vec_id", "embedding", "ts", semCents, minScoreE4 = 3000L,
-      ttlMs = 600000L, maxCell = 2)
+      "vec_id", "embedding", semCents, minScoreE4 = 3000L,
+      retention = Retention.Ttl("ts", 600000L), maxCell = 2)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("sem_rocks_hits")
       .option("checkpointLocation", tempDir("semrocks-ckpt"))
@@ -652,9 +647,9 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
         .schema("vec_id LONG, embedding ARRAY<FLOAT>, ts TIMESTAMP")
         .option("maxFilesPerTrigger", "1").parquet(inDir)
         .withWatermark("ts", "0 seconds")
-      StreamingDedup.semanticDupStreamTtl(
-          src, "vec_id", "embedding", "ts", semCents,
-          minScoreE4 = 3000L, ttlMs = 3600000L)
+      StreamingDedup.semanticDupStream(
+          src, "vec_id", "embedding", semCents,
+          minScoreE4 = 3000L, retention = Retention.Ttl("ts", 3600000L))
         .toDF()
         .writeStream.outputMode("append")
         .format("parquet").option("path", outDir)
@@ -677,5 +672,63 @@ class StreamingDedupSpec extends AnyFlatSpec with Matchers with SparkFixture {
       .parquet(outDir).as[SemDupHit].collect()
       .map(h => (h.vecId, h.matchedVecId, h.scoreE4)).toSeq
     out shouldBe Seq((21L, 1L, 10000L))
+  }
+
+  behavior of "StreamingDedup state writes"
+
+  it should "write a key's state row at first access, then only when it changes" in {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val boiler = "the same boilerplate footer text repeated on every single page here"
+    // (numRowsTotal, numRowsUpdated) of the last trigger
+    def rows(q: org.apache.spark.sql.streaming.StreamingQuery) = {
+      val op = q.lastProgress.stateOperators.head
+      (op.numRowsTotal, op.numRowsUpdated)
+    }
+    def run[T](hits: org.apache.spark.sql.Dataset[T], name: String)(
+        body: org.apache.spark.sql.streaming.StreamingQuery => Unit): Unit = {
+      val q = hits.writeStream.outputMode("append").format("memory")
+        .queryName(name).option("checkpointLocation", tempDir(name)).start()
+      try body(q) finally q.stop()
+    }
+    // near, cap 1: the first doc fills its 4 band buckets; a later
+    // duplicate finds them full and rewrites none
+    val near = MemoryStream[(Long, String)]
+    run(StreamingDedup.nearDupStream(near.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", maxBucket = 1), "sw_near") { q =>
+      near.addData((1L, boiler)); q.processAllAvailable()
+      rows(q) shouldBe ((4L, 4L))
+      near.addData((2L, boiler)); q.processAllAvailable()
+      rows(q) shouldBe ((4L, 0L))
+    }
+    // near, cap 0: no member is ever stored and no hit emitted, but
+    // each accessed bucket still gets its (empty) row
+    val near0 = MemoryStream[(Long, String)]
+    run(StreamingDedup.nearDupStream(near0.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", maxBucket = 0), "sw_near0") { q =>
+      near0.addData((1L, boiler)); q.processAllAvailable()
+      near0.addData((2L, boiler)); q.processAllAvailable()
+      rows(q) shouldBe ((4L, 0L))
+      spark.table("sw_near0").count() shouldBe 0
+    }
+    // exact: the owner is written once; its duplicates rewrite nothing
+    val exact = MemoryStream[(Long, String)]
+    run(StreamingDedup.exactDupStream(exact.toDF().toDF("doc_id", "text"),
+        "doc_id", "text"), "sw_exact") { q =>
+      exact.addData((1L, boiler)); q.processAllAvailable()
+      rows(q) shouldBe ((1L, 1L))
+      exact.addData((2L, boiler), (3L, boiler)); q.processAllAvailable()
+      rows(q) shouldBe ((1L, 0L))
+    }
+    // semantic, cap 1: a full cell is not rewritten by a later arrival
+    val sem = MemoryStream[(Long, Seq[Float])]
+    run(StreamingDedup.semanticDupStream(sem.toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", semCents, minScoreE4 = 3000L, maxCell = 1),
+        "sw_sem") { q =>
+      sem.addData((1L, oneHot(0).toSeq)); q.processAllAvailable()
+      rows(q) shouldBe ((1L, 1L))
+      sem.addData((2L, oneHot(0).toSeq)); q.processAllAvailable()
+      rows(q) shouldBe ((1L, 0L))
+    }
   }
 }

@@ -30,10 +30,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, Boolean)]
-    val hits = StreamingDedup.nearDupStreamRetract(
-      StreamingDedup.bandRowsCtl(
-        in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text", "retract"),
-      minSigMatch = 6)
+    val hits = StreamingDedup.nearDupStream(
+      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text",
+      Retention.Retractable("retract"), minSigMatch = 6)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_near_hits")
       .option("checkpointLocation", tempDir("retract-near-ckpt"))
@@ -74,10 +73,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     implicit val sqlCtx = spark.sqlContext
     val boiler = "the same boilerplate footer text repeated on every single page here"
     val in = MemoryStream[(Long, String, Boolean)]
-    val hits = StreamingDedup.nearDupStreamRetract(
-      StreamingDedup.bandRowsCtl(
-        in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text", "retract"),
-      maxBucket = 2, minSigMatch = 6)
+    val hits = StreamingDedup.nearDupStream(
+      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text",
+      Retention.Retractable("retract"), maxBucket = 2, minSigMatch = 6)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_cap_hits")
       .option("checkpointLocation", tempDir("retract-cap-ckpt"))
@@ -108,8 +106,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, Boolean)]
-    val hits = StreamingDedup.exactDupStreamRetract(
-      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text", "retract")
+    val hits = StreamingDedup.exactDupStream(
+      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text",
+      Retention.Retractable("retract"))
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_exact_hits")
       .option("checkpointLocation", tempDir("retract-exact-ckpt"))
@@ -155,9 +154,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     val in = MemoryStream[(Long, String, Boolean)]
     // cap = 4: a 6-takedown burst against ONE hash chain must keep
     // only the 4 NEWEST tombstones in stream state
-    val hits = StreamingDedup.exactDupStreamRetract(
-      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text", "retract",
-      maxTombstones = 4)
+    val hits = StreamingDedup.exactDupStream(
+      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text",
+      Retention.Retractable("retract", maxTombstones = 4))
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_cap_hits")
       .option("checkpointLocation", tempDir("retract-cap-ckpt"))
@@ -196,8 +195,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, Boolean)]
-    val hits = StreamingDedup.exactDupStreamRetract(
-      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text", "retract")
+    val hits = StreamingDedup.exactDupStream(
+      in.toDF().toDF("doc_id", "text", "retract"), "doc_id", "text",
+      Retention.Retractable("retract"))
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_order_hits")
       .option("checkpointLocation", tempDir("retract-order-ckpt"))
@@ -229,10 +229,10 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Seq[Float], Boolean)]
-    val hits = StreamingDedup.semanticDupStreamRetract(
+    val hits = StreamingDedup.semanticDupStream(
       in.toDF().toDF("vec_id", "embedding", "retract"),
-      "vec_id", "embedding", "retract", semCents,
-      minScoreE4 = 3000L, maxCell = 2)
+      "vec_id", "embedding", semCents,
+      minScoreE4 = 3000L, retention = Retention.Retractable("retract"), maxCell = 2)
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("retract_sem_hits")
       .option("checkpointLocation", tempDir("retract-sem-ckpt"))
@@ -273,11 +273,9 @@ class StreamingRetractionSpec extends AnyFlatSpec with Matchers with SparkFixtur
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val hits = StreamingDedup.nearDupStreamTtl(
-      StreamingDedup.bandRowsTs(
-        in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
-        "doc_id", "text", "ts"),
-      ttlMs = 600000L, minSigMatch = 6) // 10-minute horizon
+    val hits = StreamingDedup.nearDupStream(
+      in.toDF().toDF("doc_id", "text", "ts").withWatermark("ts", "0 seconds"),
+      "doc_id", "text", Retention.Ttl("ts", 600000L), minSigMatch = 6) // 10-minute horizon
     val q = hits.writeStream.outputMode("append")
       .format("memory").queryName("ttl_heal_hits")
       .option("checkpointLocation", tempDir("ttl-heal-ckpt"))
