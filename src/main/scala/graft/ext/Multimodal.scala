@@ -113,7 +113,9 @@ object Multimodal {
   final case class ImageFeatures(width: Int, height: Int,
       sumR: Long, sumG: Long, sumB: Long)
 
-  private final case class DecodedImage(id: Long,
+  /** A Dataset row type: public, because generated code calls its
+    * accessors. */
+  final case class DecodedImage(id: Long,
       width: Option[Int], height: Option[Int],
       sumR: Option[Long], sumG: Option[Long], sumB: Option[Long])
 

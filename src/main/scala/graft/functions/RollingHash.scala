@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -59,19 +60,23 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 }
 
 /** Session registration for the engine's native expressions. Idempotent
-  * — safe to call from every query lambda. */
+  * — safe to call from every query lambda: a session whose registry
+  * already holds every `graft_*` name is left as it is, so per-trigger
+  * callers neither replace the functions nor log a replacement warning
+  * each time. */
 object GraftFunctions {
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_rolling_hash" -> (exprs => RollingHash(exprs.head)),
+    "graft_vector_dot" -> (exprs => VectorDot(exprs(0), exprs(1))),
+    "graft_vector_sqdist" -> (exprs => VectorSqDist(exprs(0), exprs(1))),
+    "graft_nfc" -> (exprs => NfcNormalize(exprs.head)),
+    "graft_nfkc" -> (exprs => NfkcNormalize(exprs.head)))
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_vector_sqdist", exprs => VectorSqDist(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "graft_nfkc", exprs => NfkcNormalize(exprs.head), "scala_udf")
+    if (!builders.forall { case (name, _) => registry.functionExists(FunctionIdentifier(name)) })
+      builders.foreach { case (name, build) =>
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+      }
   }
 }

@@ -1,7 +1,13 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -85,22 +91,29 @@ import graft.sinks.ArcaneLayout
   * Scale shape per micro-batch (designed for 100 TB corpora):
   * admission and matching read only TOUCHED partitions — every store
   * is hive-partitioned (hash buckets for hashes/bands, cell for
-  * cells), the probe side broadcasts the batch's O(batch) key set, and
+  * cells), each tier's slice is read ONCE through a literal partition
+  * filter with the batch's rows shipped as a broadcast variable, and
   * store rows per bucket/cell are CAPPED (`maxBucket`/`maxCell` — the
   * same skew bounds as the stateful tiers), so the per-batch cost is
-  * O(batch × cap), never O(corpus). Appends accumulate small files;
-  * [[compact]] is the maintenance pass. Decisions land as a
-  * partitioned parquet table; the only driver-side collect is the
-  * cluster merge's ([[graft.ext.ComponentStore.merge]], when a cluster
-  * path is set): the batch's drop edges and the roots of their
-  * endpoints — the id sets its store lookups broadcast to the
-  * executors anyway. Both are bounded by the batch: at most one edge
-  * per dropped arrival, and one root per endpoint.
+  * O(batch × cap), never O(corpus). A trigger collects three things to
+  * the driver, each bounded by the batch: the KEY SETS (every
+  * arrival's hash, signature and band keys, cell and vector — one row
+  * per arrival), the per-tier KEEPER MAPS with the touched keys' stored
+  * counts (at most one entry per arrival, touched key or batch row),
+  * and the VERDICT (one row per arrival). The verdict and every
+  * admission are assembled there and written from one partition each,
+  * so a trigger runs a fixed handful of Spark jobs whatever the batch
+  * holds. The cluster merge ([[graft.ext.ComponentStore.merge]], when
+  * a cluster path is set) takes the in-memory verdict's drop edges and
+  * collects the roots of their endpoints: at most one edge per dropped
+  * arrival, and one root per endpoint. Appends accumulate small files;
+  * [[compact]] is the maintenance pass.
   *
   * Exactly-once: decisions for batch B are written by OVERWRITE to
   * `decisions/batch=B` (replay rewrites the same rows), and store
   * admission is guarded by a `_commits/B` marker written LAST plus
-  * insert-if-absent anti-joins inside — a replayed epoch with the
+  * insert-if-absent filtering inside (a batch row already stored is
+  * never written again) — a replayed epoch with the
   * marker present skips admission entirely; a crash mid-admission
   * re-runs it where only the missing rows insert. (The one divergence
   * window: a crash between partial table writes can admit a batch's
@@ -125,21 +138,7 @@ object StreamingDecision {
   private val decisionsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("decision", StringType),
     StructField("keeper_id", LongType), StructField("batch", StringType)))
-
-  /** One shared pool for the per-batch materialize overlap (VERDICT
-    * r20 #3: a fresh pool per micro-batch is waste; the overlap itself
-    * is additionally size-gated at the call site). Two daemon threads —
-    * they must never keep the JVM alive after the stream stops. */
-  private lazy val materializePool = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    java.util.concurrent.Executors.newFixedThreadPool(2,
-      new java.util.concurrent.ThreadFactory {
-        override def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-materialize-${n.getAndIncrement()}")
-          t.setDaemon(true); t
-        }
-      })
-  }
+  private val verdictSchema = StructType(decisionsSchema.fields.dropRight(1))
 
   private def bktOf(c: org.apache.spark.sql.Column, b: Int) =
     pmod(hash(c), lit(b))
@@ -552,12 +551,6 @@ object StreamingDecision {
       "doc_id", "keeper_id", clusterPath)
   }
 
-  /** Decide one micro-batch against the stores under `path`, write the
-    * decisions to `decisions/batch=<batchKey>`, admit the batch, and
-    * return the decision frame. `centroids` is the semantic tier's
-    * FIXED quantizer (the persisted VectorIndex coarse centroids —
-    * coarseK × dim doubles of metadata); pass `embCol = None` (or an
-    * empty centroid set) to run a text-only two-tier surface. */
   /** The quality-tier fail set over arrivals (doc_id, q_fail=1):
     * map-only scoring of the four per-doc features with the caller's
     * fitted literal weights — or, when `qualityLm` is given, the FULL
@@ -605,6 +598,114 @@ object StreamingDecision {
     }
   }
 
+  /** One arrival's batch-derived keys, collected to the driver: its
+    * content hash, MinHash signature and band keys (absent without
+    * shingle support), and its coarse cell with the vector (absent
+    * without an embedding or with the semantic tier off), each store
+    * key with the `bkt` it lives under. */
+  private final case class Arrival(id: Long, tomb: Boolean, h: String, hBkt: Int,
+      sig: Seq[Long], bands: Seq[(String, Int)],
+      cell: Option[Long], emb: Seq[Float], nrm: Double)
+
+  /** What one tier's touched store slice says about a batch: `keeper`,
+    * the smallest matching stored member per arrival; `stored`, the
+    * stored row count per touched key; `present`, the batch's own
+    * (key, id) rows already stored (a replay's, or an earlier attempt's
+    * — excluded from matching and never inserted again). Every part is
+    * bounded by the batch: one entry per arrival, touched key, or batch
+    * row. */
+  private final case class Probe(keeper: Map[Long, Long], stored: Map[Any, Int],
+      present: Set[(Any, Long)]) {
+    def ++(o: Probe): Probe = Probe(
+      o.keeper.foldLeft(keeper) { case (acc, (d, m)) =>
+        acc.updated(d, acc.get(d).fold(m)(math.min(_, m))) },
+      o.stored.foldLeft(stored) { case (acc, (k, n)) =>
+        acc.updated(k, acc.getOrElse(k, 0) + n) },
+      present ++ o.present)
+  }
+  private val NoProbe = Probe(Map.empty, Map.empty, Set.empty)
+
+  /** One tier's touched store slice, folded per partition into a
+    * [[Probe]]; `batch` is the broadcast it reads, destroyed once the
+    * fold has run. */
+  private final case class Slice(folded: RDD[Probe], batch: Broadcast[_])
+
+  /** Plan the read of one tier's touched store slice: a literal filter
+    * on the touched `partCol` values prunes the store to their
+    * partitions, and the batch's rows per key (`batch`, whose tuples
+    * start with the arrival id) reach the executors as a broadcast
+    * variable, so the plan's size does not grow with the batch. Every
+    * stored row of a touched key is compared with the batch rows of its
+    * key by `hit(batchRow)`, a Spark expression over the stored row's
+    * columns. None when the batch has no key or the table does not
+    * exist yet. */
+  private def slice[K: TypeTag, R <: Product: TypeTag](spark: SparkSession, dir: String,
+      schema: StructType, partCol: String, parts: Seq[Any], keyCol: String,
+      idCol: String, batch: Map[K, Seq[R]])(hit: Column => Column): Option[Slice] =
+    if (batch.isEmpty || !StoreMeta.fs(spark, dir).exists(new Path(dir))) None
+    else {
+      val bc = spark.sparkContext.broadcast(batch)
+      val touched = udf((k: K) => bc.value.contains(k))
+      val rowsOf = udf((k: K) => bc.value(k))
+      val folded = spark.read.schema(schema).parquet(dir)
+        .filter(col(partCol).isin(parts: _*) && touched(col(keyCol)))
+        .withColumn("__b", rowsOf(col(keyCol)))
+        .select(col(keyCol), col(idCol),
+          exists(col("__b"), r => r("_1") === col(idCol)),
+          transform(filter(col("__b"), hit), r => r("_1")))
+        .rdd.mapPartitions { rows =>
+          val keeper = mutable.HashMap.empty[Long, Long]
+          val stored = mutable.HashMap.empty[Any, Int]
+          val present = mutable.HashSet.empty[(Any, Long)]
+          rows.foreach { r =>
+            val (key, m) = (r.get(0), r.getLong(1))
+            stored(key) = stored.getOrElse(key, 0) + 1
+            if (r.getBoolean(2)) present += key -> m
+            else r.getSeq[Long](3).foreach(d => keeper(d) = math.min(keeper.getOrElse(d, m), m))
+          }
+          Iterator(Probe(keeper.toMap, stored.toMap, present.toSet))
+        }
+      Some(Slice(folded, bc))
+    }
+
+  /** Read every tier's slice ONCE, all in ONE Spark job (their
+    * partitions are scheduled together), and merge each tier's
+    * partition results on the driver: one [[Probe]] per tier, in order.
+    * The verdict and that tier's admission both derive from it. */
+  private def probe(spark: SparkSession, tiers: Seq[Option[Slice]]): Seq[Probe] =
+    try {
+      val tagged = tiers.zipWithIndex.collect { case (Some(s), i) => s.folded.map(i -> _) }
+      val got = if (tagged.isEmpty) Array.empty[(Int, Probe)]
+        else spark.sparkContext.union(tagged).collect()
+      tiers.indices.map(i => got.collect { case (`i`, p) => p }.foldLeft(NoProbe)(_ ++ _))
+    } finally tiers.flatten.foreach(_.batch.destroy())
+
+  /** Sequential cap fill of one tier: the batch's rows not yet stored,
+    * ranked per key by arrival id after the key's stored rows
+    * (rank = stored count + in-batch rank); only ranks within `cap`
+    * are admitted, so the table stays bounded by keys × cap. */
+  private def capFill[A](rows: Seq[A], key: A => Any, id: A => Long,
+      p: Probe, cap: Int): Seq[(A, Int)] =
+    rows.filterNot(a => p.present((key(a), id(a)))).groupBy(key).toSeq
+      .flatMap { case (k, rs) =>
+        val n0 = p.stored.getOrElse(k, 0)
+        rs.sortBy(id).zipWithIndex.map { case (a, i) => a -> (n0 + i + 1) }
+      }
+      .filter(_._2 <= cap)
+
+  /** Decide one micro-batch against the stores under `path`, write the
+    * decisions to `decisions/batch=<batchKey>`, admit the batch, and
+    * return the decision frame. `centroids` is the semantic tier's
+    * FIXED quantizer (the persisted VectorIndex coarse centroids —
+    * coarseK × dim doubles of metadata); pass `embCol = None` (or an
+    * empty centroid set) to run a text-only two-tier surface.
+    *
+    * The batch is read once: one job collects every arrival's keys
+    * (hash, band keys, cell), each tier's touched store slice is read
+    * once by [[probe]], and the verdict and every admission are
+    * assembled on the driver from those results, then written as
+    * independent single-partition jobs. The returned frame is that
+    * in-memory verdict. */
   def processBatch(batch: DataFrame, idCol: String, textCol: String,
       embCol: Option[String], path: String,
       centroids: Seq[(Long, Array[Double])], batchKey: String,
@@ -634,8 +735,10 @@ object StreamingDecision {
     val baseCols = Seq(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text")) ++ embCol.map(c => col(c).as("embedding"))
     // one slot per id within a batch (at-least-once replay guard — the
-    // same in-batch dedup every stateful tier applies)
-    val in0 = batch.select(baseCols: _*).dropDuplicates("doc_id")
+    // same in-batch dedup every stateful tier applies); a row without an
+    // id can be neither decided nor admitted, so it is skipped
+    val in0 = batch.select(baseCols: _*).filter(col("doc_id").isNotNull)
+      .dropDuplicates("doc_id")
     // TOMBSTONE ENFORCEMENT (round 12): a RETRACTED id re-arriving
     // after its takedown must not be silently re-admitted — it gets an
     // explicit 'drop_tombstone' verdict (keeper = itself: there is no
@@ -645,24 +748,50 @@ object StreamingDecision {
     // costs one exists() per batch and reads the (takedown-sized)
     // tombstone table only when a delete() ever ran; pass
     // `enforceTombstones = false` to restore admit-on-rearrival.
-    val tombDir = new Path(s"$path/tombstones")
-    val tombOn = enforceTombstones && StoreMeta.fs(spark, path).exists(tombDir)
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (in, tombRows) =
-      if (tombOn) {
-        val t = spark.read.parquet(s"$path/tombstones")
-          .select(col("doc_id")).distinct()
-        // both splits derive from ONE cached frame — the batch scan
-        // and the in-batch dedup shuffle must not run twice per trigger
-        val base = in0.persist(); cached += base
-        (base.join(t, Seq("doc_id"), "left_anti").persist(),
-          base.join(t, Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), lit("drop_tombstone").as("decision"),
-              col("doc_id").as("keeper_id")))
-      } else (in0.persist(), null)
-    cached += in
+    val tombOn = enforceTombstones &&
+      StoreMeta.fs(spark, path).exists(new Path(s"$path/tombstones"))
+    val (withTomb, tomb) =
+      if (tombOn)
+        (in0.join(spark.read.parquet(s"$path/tombstones")
+            .select(col("doc_id"), lit(true).as("__tomb")).distinct(), Seq("doc_id"), "left"),
+          coalesce(col("__tomb"), lit(false)))
+      else (in0, lit(false))
+    // the quality tier reads the batch a second time: cache it then, so
+    // the batch scan and the in-batch dedup shuffle run once
+    val in = if (qualityFits.nonEmpty) withTomb.persist() else withTomb
     try {
-      val ids = in.select("doc_id")
+      // ---- keys: every arrival's hash, signature, band keys and cell
+      // in ONE job, all map-only over the deduplicated batch, tokenized
+      // once. The signature is the per-row MinHash form
+      // (Dedup.minhashSigOnce), equal value for value to the explode →
+      // min aggregate; band keys exist only with shingle support
+      // (size(tokens) ≥ shingleN).
+      val semCols =
+        if (semOn) Seq(when(col("embedding").isNotNull, col("cell")).as("cell"),
+          col("emb"), col("nrm"))
+        else Seq(lit(null).cast(LongType).as("cell"),
+          lit(null).cast(ArrayType(FloatType)).as("emb"), lit(null).cast(DoubleType).as("nrm"))
+      val arrivals = phase("keys") {
+        (if (semOn) StreamingDedup.withSemCell(in, "doc_id", "embedding", centroids) else in)
+          .select(Seq(col("doc_id"), tomb.as("tomb"), tok(col("text")).as("toks")) ++ semCols: _*)
+          .withColumn("h", Dedup.contentHashWith(identity)(col("toks")))
+          .withColumn("sig", when(size(col("toks")) >= shingleN,
+            Dedup.minhashSigOnce(TextOps.shingles(col("toks"), shingleN), k)))
+          .withColumn("bands", when(col("sig").isNotNull,
+            Dedup.lshBandKeys(col("sig"), bands, rowsPerBand)))
+          .select(col("doc_id"), col("tomb"), col("h"), bktOf(col("h"), b), col("sig"),
+            col("bands"), transform(col("bands"), bk => bktOf(bk, b)),
+            col("cell"), col("emb"), col("nrm"))
+          .collect().toSeq.map { r =>
+            def seq[A](i: Int): Seq[A] = if (r.isNullAt(i)) Nil else r.getSeq[A](i)
+            val vec = !r.isNullAt(7)
+            Arrival(r.getLong(0), r.getBoolean(1), r.getString(2), r.getInt(3), seq[Long](4),
+              seq[String](5).zip(seq[Int](6)),
+              if (vec) Some(r.getLong(7)) else None, if (vec) seq[Float](8) else Nil,
+              if (vec) r.getDouble(9) else 0.0)
+          }
+      }
+      val (live, tombed) = arrivals.partition(!_.tomb)
 
       // ---- quality tier (VERDICT r13 #2): MAP-ONLY scoring with the
       // caller's FITTED literal weights over the four per-doc features
@@ -674,229 +803,96 @@ object StreamingDecision {
       // exclusion rule, ADVICE r15). Admission is UNAFFECTED — stores
       // record what the stream
       // has seen; a quality-dropped doc is still a valid dedup member.
-      val qFail: DataFrame =
-        qualityFailSet(in, qualityFits, qualityStop, shingleN, qualityLm,
-          qualityLmBroadcast, tok)
+      val qFail: Set[Long] =
+        if (qualityFits.isEmpty || live.isEmpty) Set.empty
+        else phase("quality") {
+          qualityFailSet(in.filter(!tomb), qualityFits, qualityStop, shingleN, qualityLm,
+            qualityLmBroadcast, tok)
+            .select("doc_id").collect().map(_.getLong(0)).toSet
+        }
 
-      // ---- exact tier: stored owner, else smallest same-batch id ----
-      val bh = in.select(col("doc_id"),
-          Dedup.contentHashWith(tok)(col("text")).as("h"))
-        .withColumn("bkt", bktOf(col("h"), b))
-      val storedH = readOrEmpty(spark, s"$path/hashes/data", hashesSchema)
-      // store rows for the batch's hashes only: the broadcast batch key
-      // set prunes bkt partitions (files) then rows. The replay guard
-      // drops stored rows matching the batch's own (h, owner) PAIRS —
-      // row identity, not bare id: a replayed batch must not have its
-      // own stored ownership claim the owner itself, but an id
-      // re-arriving with DIFFERENT content must not suppress that id's
-      // old ownership of some other hash (a bare-id anti-join would
-      // let a true duplicate of the old content through as 'keep')
-      val ownerHits = storedH
-        .join(broadcast(bh.select("bkt", "h").distinct()), Seq("bkt", "h"), "left_semi")
-        .join(broadcast(bh.select(col("h"), col("doc_id").as("owner_id"))),
-          Seq("h", "owner_id"), "left_anti")
-        .select(col("h"), col("owner_id"))
-      val batchOwn = bh.groupBy("h").agg(min("doc_id").as("batch_owner"))
-      val ex = bh
-        .join(broadcast(ownerHits), Seq("h"), "left")
-        .join(batchOwn, Seq("h"))
-        .select(col("doc_id"),
-          coalesce(col("owner_id"),
-            when(col("batch_owner") =!= col("doc_id"), col("batch_owner")))
-            .as("ex_keeper"))
-
-      // ---- near tier: batch bands vs stored bucket members ----------
-      val exdIn = Dedup.shingleRows(in, "doc_id", "text", shingleN, tok)
-      val projIn = Dedup.minhashFromShingles(exdIn, "doc_id", k, bands, rowsPerBand)
-      val bandIn = projIn
-        .select(col("doc_id"), col("sig"), explode(col("bands")).as("bk"))
-        .withColumn("bkt", bktOf(col("bk"), b))
-        .persist()
-      cached += bandIn
-      val storedB = readOrEmpty(spark, s"$path/bands/data", bandsSchema)
-      // stored members of TOUCHED buckets only — bounded by
-      // O(batch bands × maxBucket); the broadcast key set prunes
-      // files. Replay guard on (bk, doc_id) row identity (same
-      // rationale as the exact tier).
-      val bucketMembers = storedB
-        .join(broadcast(bandIn.select("bkt", "bk").distinct()), Seq("bkt", "bk"), "left_semi")
-        .join(broadcast(bandIn.select("bk", "doc_id").distinct()),
-          Seq("bk", "doc_id"), "left_anti")
-      val nearK = bucketMembers
-        .select(col("bkt"), col("bk"), col("doc_id").as("m_id"), col("sig").as("m_sig"))
-        .join(broadcast(bandIn), Seq("bkt", "bk"))
-        .withColumn("n_sig_match",
-          size(filter(zip_with(col("sig"), col("m_sig"), (x, y) => x === y),
-            v => v)))
-        .filter(col("n_sig_match") >= minSigMatch)
-        .groupBy("doc_id").agg(min("m_id").as("near_keeper"))
-
-      // ---- semantic tier: batch vectors vs stored cell members ------
-      val asgIn =
-        if (semOn) {
-          val a = StreamingDedup.withSemCell(in.filter(col("embedding").isNotNull),
-              "doc_id", "embedding", centroids)
-            .select(col("vecId").as("doc_id"), col("cell"), col("emb"), col("nrm"))
-            .persist()
-          cached += a
-          a
-        } else
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(StructField("doc_id", LongType),
-              StructField("cell", LongType),
-              StructField("emb", ArrayType(FloatType)),
-              StructField("nrm", DoubleType))))
-      val storedC = readOrEmpty(spark, s"$path/cells/data", cellsSchema)
-      // replay guard on (cell, vec_id) row identity
-      val cellMembers = storedC
-        .join(broadcast(asgIn.select("cell").distinct()), Seq("cell"), "left_semi")
-        .join(broadcast(asgIn.select(col("cell"), col("doc_id").as("vec_id"))),
-          Seq("cell", "vec_id"), "left_anti")
-      val semK = cellMembers
-        .select(col("cell"), col("vec_id").as("m_id"), col("emb").as("m_emb"),
-          col("nrm").as("m_nrm"))
-        .join(broadcast(asgIn), Seq("cell"))
-        .withColumn("score_e4",
-          round(call_function("graft_vector_dot", col("emb"), col("m_emb"))
-            / (col("nrm") * col("m_nrm")) * lit(10000.0)).cast("long"))
-        .filter(col("score_e4") >= minScoreE4)
-        .groupBy("doc_id").agg(min("m_id").as("sem_keeper"))
+      // ---- the three touched store slices, each read once. Replay
+      // guards are by stored-row IDENTITY — (h, owner), (bk, doc_id),
+      // (cell, vec_id): a stored row that is one of the batch's own
+      // rows (a replay) claims nothing, but an id re-arriving with
+      // DIFFERENT content must not suppress that id's old rows (a
+      // bare-id guard would let a true duplicate of its old content
+      // through as 'keep').
+      val byHash = live.groupBy(_.h)
+      val bandRows = for (a <- live; (bk, bkt) <- a.bands) yield (bk, bkt, a)
+      val vecs = if (semOn) live.filter(_.cell.nonEmpty) else Nil
+      val Seq(hashes, nearP, semP) = phase("probe") {
+        probe(spark, Seq(
+          slice(spark, s"$path/hashes/data", hashesSchema, "bkt",
+            live.map(_.hBkt).distinct, "h", "owner_id",
+            byHash.map { case (h, as) => h -> as.map(a => Tuple1(a.id)) })(_ => lit(true)),
+          slice(spark, s"$path/bands/data", bandsSchema, "bkt",
+            bandRows.map(_._2).distinct, "bk", "doc_id",
+            bandRows.groupBy(_._1).map { case (bk, rs) => bk -> rs.map(r => (r._3.id, r._3.sig)) }) {
+            r => size(filter(zip_with(r("_2"), col("sig"), (x, y) => x === y), v => v)) >=
+              minSigMatch
+          },
+          slice(spark, s"$path/cells/data", cellsSchema, "cell",
+            vecs.map(_.cell.get).distinct, "cell", "vec_id",
+            vecs.groupBy(_.cell.get).map { case (c, as) => c -> as.map(a => (a.id, a.emb, a.nrm)) }) {
+            r => round(call_function("graft_vector_dot", r("_2"), col("emb"))
+              / (r("_3") * col("nrm")) * lit(10000.0)).cast("long") >= minScoreE4
+          }))
+      }
 
       // ---- verdict: tombstone > exact > near > semantic > quality
-      //      > keep ------------------------------------------------
-      val decLive = in.select("doc_id")
-        .join(broadcast(ex), Seq("doc_id"), "left")
-        .join(broadcast(nearK), Seq("doc_id"), "left")
-        .join(broadcast(semK), Seq("doc_id"), "left")
-        .join(broadcast(qFail), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("ex_keeper").isNotNull, lit("drop_exact"))
-            .when(col("near_keeper").isNotNull, lit("drop_near"))
-            .when(col("sem_keeper").isNotNull, lit("drop_semantic"))
-            .when(col("q_fail").isNotNull, lit("drop_quality"))
-            .otherwise(lit("keep")).as("decision"),
-          coalesce(col("ex_keeper"), col("near_keeper"), col("sem_keeper"),
-            col("doc_id")).as("keeper_id"))
-      val dec = if (tombRows == null) decLive else decLive.unionByName(tombRows)
+      //      > keep. Exact keeper: the stored owner, else the smallest
+      //      same-batch id with the hash ----------------------------
+      val batchOwner = byHash.map { case (h, as) => h -> as.map(_.id).min }
+      val verdict = (live.map { a =>
+        val ex = hashes.keeper.get(a.id).orElse(Some(batchOwner(a.h)).filter(_ != a.id))
+        val near = nearP.keeper.get(a.id)
+        val sem = semP.keeper.get(a.id)
+        val decision =
+          if (ex.nonEmpty) "drop_exact" else if (near.nonEmpty) "drop_near"
+          else if (sem.nonEmpty) "drop_semantic" else if (qFail(a.id)) "drop_quality"
+          else "keep"
+        Row(a.id, decision, ex.orElse(near).orElse(sem).getOrElse(a.id))
+      } ++ tombed.map(a => Row(a.id, "drop_tombstone", a.id))).sortBy(_.getLong(0))
+      val dec = local(spark, verdict, verdictSchema)
 
       // ---- admission (marker-guarded, insert-if-absent) -------------
       val fs = StoreMeta.fs(spark, path)
       val marker = new Path(s"$path/_commits/$batchKey")
       val admitted = fs.exists(marker)
-      val admits = scala.collection.mutable.ArrayBuffer.empty[(String, () => Unit)]
-      if (!admitted) {
-        // hashes: first arrival owns; an already-owned hash is never
-        // re-admitted (ownership persists across the stream's lifetime)
-        val storedTouchedH = storedH
-          .join(broadcast(bh.select("bkt", "h").distinct()), Seq("bkt", "h"), "left_semi")
-          .select("bkt", "h")
-        val newH = bh.groupBy("bkt", "h").agg(min("doc_id").as("owner_id"))
-          .join(broadcast(storedTouchedH), Seq("bkt", "h"), "left_anti")
-          .select("h", "owner_id", "bkt")
-        admits += ("admit-hashes" ->
-          (() => appendTable(newH, s"$path/hashes", Seq("bkt"))))
+      val admits: Seq[(String, Seq[Row], StructType, String)] =
+        if (admitted) Nil
+        else Seq(
+          // hashes: first arrival owns; an already-owned hash is never
+          // re-admitted (ownership persists across the stream's lifetime)
+          ("hashes", batchOwner.toSeq.sorted
+            .filterNot { case (h, _) => hashes.stored.contains(h) }
+            .map { case (h, o) => Row(h, o, byHash(h).head.hBkt) }, hashesSchema, "bkt"),
+          // bands: sequential cap fill per band key
+          ("bands",
+            capFill[(String, Int, Arrival)](bandRows, _._1, _._3.id, nearP, maxBucket)
+              .map { case ((bk, bkt, a), rank) => Row(bk, a.id, a.sig, rank, bkt) },
+            bandsSchema, "bkt"),
+          // cells: same sequential fill per coarse cell
+          ("cells",
+            capFill[Arrival](vecs, _.cell.get, _.id, semP, maxCell)
+              .map { case (a, rank) => Row(a.id, a.emb, a.nrm, rank, a.cell.get) },
+            cellsSchema, "cell"))
+          .filter(_._2.nonEmpty)
 
-        // bands: sequential cap fill — rank = stored count + in-batch
-        // row_number by doc_id; only rank ≤ maxBucket rows are stored,
-        // so the table is bounded by buckets × maxBucket
-        val storedTouchedB = storedB
-          .join(broadcast(bandIn.select("bkt", "bk").distinct()), Seq("bkt", "bk"), "left_semi")
-        val bCnt = storedTouchedB.groupBy("bkt", "bk")
-          .agg(count(lit(1)).cast("int").as("n0"))
-        val newB = bandIn
-          .join(broadcast(storedTouchedB.select("bkt", "bk", "doc_id")),
-            Seq("bkt", "bk", "doc_id"), "left_anti")
-          .withColumn("rn",
-            row_number().over(Window.partitionBy("bkt", "bk").orderBy("doc_id")))
-          .join(broadcast(bCnt), Seq("bkt", "bk"), "left")
-          .withColumn("rank", (coalesce(col("n0"), lit(0)) + col("rn")).cast("int"))
-          .filter(col("rank") <= maxBucket)
-          .select("bk", "doc_id", "sig", "rank", "bkt")
-        admits += ("admit-bands" ->
-          (() => appendTable(newB, s"$path/bands", Seq("bkt"))))
-
-        // cells: same sequential fill per coarse cell
-        if (semOn) {
-          val storedTouchedC = storedC
-            .join(broadcast(asgIn.select("cell").distinct()), Seq("cell"), "left_semi")
-          val cCnt = storedTouchedC.groupBy("cell")
-            .agg(count(lit(1)).cast("int").as("n0"))
-          val newC = asgIn.select(col("cell"), col("doc_id").as("vec_id"),
-              col("emb"), col("nrm"))
-            .join(broadcast(storedTouchedC.select("cell", "vec_id")),
-              Seq("cell", "vec_id"), "left_anti")
-            .withColumn("rn",
-              row_number().over(Window.partitionBy("cell").orderBy("vec_id")))
-            .join(broadcast(cCnt), Seq("cell"), "left")
-            .withColumn("rank", (coalesce(col("n0"), lit(0)) + col("rn")).cast("int"))
-            .filter(col("rank") <= maxCell)
-            .select("vec_id", "emb", "nrm", "rank", "cell")
-          admits += ("admit-cells" ->
-            (() => appendTable(newC, s"$path/cells", Seq("cell"))))
-        }
-      }
-
-      // The verdict write and the three admissions are INDEPENDENT
-      // Spark jobs (verdict is replay-idempotent overwrite; admissions
-      // read only pre-batch store state) — run them CONCURRENTLY from
-      // the driver, the standard Spark pattern for independent actions.
-      // Serially their per-job fixed cost dominates small micro-batches
-      // (~4× the slowest job); overlapped, batch latency ≈ the slowest
-      // job. The shared cached inputs are materialized FIRST so the
-      // concurrent consumers reuse the cache instead of racing to
-      // compute it.
-      phase("materialize") {
-        // bandIn and asgIn both derive from the (now cached) `in` —
-        // after in.count() they are independent jobs. Overlap them
-        // (guide §2.6) ONLY when one count job cannot fill the
-        // scheduler on its own: round 20 overlapped unconditionally
-        // from a fresh pool per batch, and the driver measured
-        // decision_steady 4.3→9.8 s (3× faster at 8 cores than 32) —
-        // that row's batch is a join output whose cached partitioning
-        // stays at full shuffle width, so each count already saturates
-        // the cores and two concurrent wide jobs just thrash the
-        // scheduler. Tiny file-stream micro-batches (a few partitions)
-        // keep the overlap win, now from one shared daemon pool
-        // (VERDICT r20 #3) with the caller's job group carried over so
-        // stream-stop cancellation still reaches the counts.
-        in.count()
-        val cores = spark.sparkContext.defaultParallelism
-        if (sys.props.contains("graft.timing") || sys.env.contains("GRAFT_TIMING"))
-          System.err.println(s"[dec-phase] $batchKey materialize " +
-            s"parts=${in.rdd.getNumPartitions} cores=$cores")
-        if (semOn && in.rdd.getNumPartitions * 2 <= cores) {
-          val sc = spark.sparkContext
-          val gid = sc.getLocalProperty("spark.jobGroup.id")
-          val desc = sc.getLocalProperty("spark.job.description")
-          val p = materializePool
-          val futs = Seq(() => bandIn.count(): Unit, () => asgIn.count(): Unit)
-            .map(j => p.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = {
-                if (gid != null) sc.setJobGroup(gid, desc, interruptOnCancel = true)
-                try j() finally sc.clearJobGroup()
-              }
-            }))
-          try futs.foreach(_.get())
-          catch { case e: Throwable =>
-            // cancel the sibling count before unwinding (ADVICE r20) —
-            // the pool is shared, so interrupt the futures rather than
-            // shutdownNow; the counts are read-only, this only stops
-            // wasted recompute after the caller unpersists the caches
-            futs.foreach(_.cancel(true))
-            throw (e match {
-              case ee: java.util.concurrent.ExecutionException =>
-                Option(ee.getCause).getOrElse(ee)
-              case _ => e
-            })
-          }
-        } else if (semOn) { bandIn.count(); asgIn.count(): Unit }
-        else bandIn.count(): Unit
-      }
-      // replay-idempotent: the same batch rewrites the same rows
+      // The verdict write and the admissions are INDEPENDENT Spark jobs
+      // (verdict is replay-idempotent overwrite; admissions derive from
+      // pre-batch store state) — run them CONCURRENTLY from the driver,
+      // the standard Spark pattern for independent actions. Each writes
+      // driver-held rows from ONE partition, so none is a wide job.
       val jobs: Seq[(String, () => Unit)] =
         ("decisions-write" -> (() =>
-          dec.write.mode("overwrite")
-            .parquet(s"$path/decisions/batch=$batchKey"))) +: admits.toSeq
+          dec.coalesce(1).write.mode("overwrite")
+            .parquet(s"$path/decisions/batch=$batchKey"))) +:
+          admits.map { case (table, rows, schema, part) =>
+            s"admit-$table" -> (() => appendTable(local(spark, rows, schema).coalesce(1),
+              s"$path/$table", Seq(part)))
+          }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
       try {
         jobs.map { case (label, job) =>
@@ -907,14 +903,12 @@ object StreamingDecision {
           try f.get()
           catch { case e: java.util.concurrent.ExecutionException =>
             // Cancel the SIBLING jobs before rethrowing (ADVICE r11):
-            // without this the outer finally unpersists the shared
-            // cached inputs while siblings still run, and the store
-            // could receive admissions after the caller has already
-            // seen the failure. shutdownNow interrupts the worker
-            // threads (Spark cancels a job whose submitting thread is
-            // interrupted) and awaitTermination drains them, so the
-            // thrown exception implies no further store writes are in
-            // flight. Replay stays marker-guarded either way.
+            // the store must not receive admissions after the caller
+            // has already seen the failure. shutdownNow interrupts the
+            // worker threads (Spark cancels a job whose submitting
+            // thread is interrupted) and awaitTermination drains them,
+            // so the thrown exception implies no further store writes
+            // are in flight. Replay stays marker-guarded either way.
             pool.shutdownNow()
             pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
             throw new RuntimeException(s"decision $label failed", e.getCause) }
@@ -934,24 +928,28 @@ object StreamingDecision {
       // does not give) are maintained incrementally, O(batch + touched
       // roots) per micro-batch, never a corpus-wide recompute. Guarded
       // by ComponentStore's own commit marker AND naturally idempotent
-      // (a replayed batch re-writes identical decisions, and re-merged
+      // (a replayed batch re-derives identical decisions, and re-merged
       // pairs contract to (root, root)).
       clusterPath.foreach { cp =>
         // self-keeper verdicts (drop_tombstone, drop_quality) are
         // policy drops, not duplicate EDGES — a (doc, doc) pair
         // carries no cluster information
-        val pairs = spark.read.parquet(s"$path/decisions/batch=$batchKey")
-          .filter(col("decision") =!= "keep" &&
+        val pairs = dec.filter(col("decision") =!= "keep" &&
             col("doc_id") =!= col("keeper_id"))
           .select(col("doc_id"), col("keeper_id"))
         graft.ext.ComponentStore.merge(pairs, "doc_id", "keeper_id", cp, batchKey)
         graft.ext.ComponentStore.maybeCompact(spark, cp, clusterCompactEvery): Unit
       }
-      spark.read.parquet(s"$path/decisions/batch=$batchKey")
+      dec
     } finally {
-      cached.foreach(_.unpersist())
+      in.unpersist(); ()
     }
   }
+
+  /** A frame over driver-held rows (a local relation: reading it back
+    * to the driver runs no Spark job). */
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   private def appendTable(df: DataFrame, target: String,
       partCols: Seq[String]): Unit = {

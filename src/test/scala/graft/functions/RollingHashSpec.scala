@@ -32,6 +32,17 @@ class RollingHashSpec extends AnyFlatSpec with Matchers with SparkFixture {
       .select(expr("graft_rolling_hash(s)")).collect().head.isNullAt(0) shouldBe true
   }
 
+  it should "be registered once per session, not replaced on every register call" in {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def builders = Seq("graft_rolling_hash", "graft_vector_dot", "graft_vector_sqdist",
+      "graft_nfc", "graft_nfkc").map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    GraftFunctions.register(spark)
+    val first = builders
+    GraftFunctions.register(spark)
+    builders.zip(first).foreach { case (now, before) => (now eq before) shouldBe true }
+  }
+
   behavior of "BottomKSketch aggregator"
 
   it should "keep the k smallest distinct values with a bounded buffer, any partitioning" in {

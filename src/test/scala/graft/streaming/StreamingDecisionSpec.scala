@@ -53,10 +53,19 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
 
   private def decide(store: String, batchKey: String,
       rows: Seq[(Long, String, Seq[Float])],
-      maxCell: Int = 64): Map[Long, (String, Long)] =
+      maxCell: Int = 64, maxBucket: Int = 64): Map[Long, (String, Long)] =
     StreamingDecision.processBatch(df(rows), "doc_id", "text",
-        Some("embedding"), store, cents, batchKey, maxCell = maxCell)
+        Some("embedding"), store, cents, batchKey, maxCell = maxCell,
+        maxBucket = maxBucket)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+
+  /** Spark jobs one `processBatch` call may run, measured by the
+    * job-budget case below: 9 for its first call (two jobs to read the
+    * batch — the in-batch dedup shuffle and the key collect —, four
+    * writes, and one schema file per new store table) and 7 for its
+    * second (the same two, one job over the three store slices, four
+    * writes). The bound is the larger count plus one. */
+  private val JobBudget = 10
 
   behavior of "StreamingDecision.processBatch"
 
@@ -201,6 +210,103 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
     val cells = spark.read.parquet(s"$store/cells/data")
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     cells shouldBe Seq(100L)
+  }
+
+  it should "bound band admission by maxBucket and score only stored members" in {
+    val store = tempDir("dec-bcap")
+    def ranks(ids: Set[Long]): Seq[(Long, Int)] =
+      spark.read.parquet(s"$store/bands/data").filter(col("doc_id").isin(ids.toSeq: _*))
+        .select("doc_id", "rank").collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq.sorted
+    // three copies of A in one batch: each of A's four band keys admits
+    // in doc-id order (not arrival order) until the cap of 2 is reached
+    val b0 = decide(store, "0",
+      Seq((12L, textA, oneHot(0)), (10L, textA, oneHot(1)), (11L, textA, oneHot(2))),
+      maxBucket = 2)
+    b0 shouldBe Map(10L -> ("keep", 10L), 11L -> ("drop_exact", 10L),
+      12L -> ("drop_exact", 10L))
+    ranks(Set(10L, 11L, 12L)) shouldBe Seq.fill(4)(10L -> 1) ++ Seq.fill(4)(11L -> 2)
+    // A's buckets are full, so the smaller id 5 is not admitted; B's
+    // fresh buckets rank after their (empty) stored rows
+    val b1 = decide(store, "1",
+      Seq((5L, textA, oneHot(3)), (15L, textB, oneHot(4)), (14L, textB, oneHot(5)),
+        (16L, textB, oneHot(6))),
+      maxBucket = 2)
+    b1(5L) shouldBe ("drop_exact", 10L)
+    b1(14L) shouldBe ("keep", 14L)
+    ranks(Set(5L, 10L, 11L, 12L, 14L, 15L, 16L)) shouldBe
+      Seq.fill(4)(10L -> 1) ++ Seq.fill(4)(11L -> 2) ++ Seq.fill(4)(14L -> 1) ++
+        Seq.fill(4)(15L -> 2)
+    // a near copy of A matches only STORED members: 10, never 5
+    val b2 = decide(store, "2", Seq((20L, textA.replace("quick", "swift"), oneHot(7))),
+      maxBucket = 2)
+    b2(20L) shouldBe ("drop_near", 10L)
+    // its bands shared with A found their buckets full; its own new
+    // bands each rank first
+    val bands = spark.read.parquet(s"$store/bands/data")
+    val keysOf10 = bands.filter(col("doc_id") === 10L).select("bk").collect().map(_.getString(0)).toSet
+    val rows20 = bands.filter(col("doc_id") === 20L).select("bk", "rank").collect()
+    rows20.length should (be > 0 and be < 4)
+    rows20.map(_.getInt(1)).toSet shouldBe Set(1)
+    rows20.map(_.getString(0)).toSet.intersect(keysOf10) shouldBe empty
+  }
+
+  it should "re-run a batch whose commit marker is missing without admitting twice" in {
+    // a crash after the store writes but before the `_commits/<key>`
+    // marker: the re-run decides identically and inserts only rows the
+    // stores lack — here none, since every write had landed
+    val store = tempDir("dec-nomarker")
+    decide(store, "0", Seq((80L, textA, oneHot(0)), (90L, textB, oneHot(32))))
+    val rows = Seq((81L, textA, oneHot(0)), (82L, textC, oneHot(32)),
+      (83L, textD, oneHot(32)), (91L, textBNear, oneHot(40)))
+    val first = decide(store, "1", rows)
+    first shouldBe Map(81L -> ("drop_exact", 80L), 82L -> ("drop_semantic", 90L),
+      83L -> ("drop_semantic", 90L), 91L -> ("drop_near", 90L))
+    def counts = Seq("hashes", "bands", "cells")
+      .map(t => t -> spark.read.parquet(s"$store/$t/data").count()).toMap
+    val before = counts
+    val marker = new java.io.File(s"$store/_commits/1")
+    marker.exists() shouldBe true
+    marker.delete() shouldBe true
+    decide(store, "1", rows) shouldBe first
+    counts shouldBe before
+    marker.exists() shouldBe true
+  }
+
+  it should "decide a batch in a bounded number of Spark jobs" in {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // jobs started by `f`, counted once the listener bus has delivered
+    // them all: the bus delivers in order, so when a marker job started
+    // after `f` reaches the listener, every job of `f` has too
+    def jobsOf(f: => Unit): Int = {
+      started.clear()
+      f
+      sc.setJobDescription("job-budget-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          d should not be null
+          d != "job-budget-marker"
+        }.size
+    }
+    val store = tempDir("dec-jobs")
+    sc.addSparkListener(listener)
+    try {
+      val j0 = jobsOf(decide(store, "0", Seq(
+        (10L, textA, oneHot(0)), (20L, textB, oneHot(32)), (30L, textC, oneHot(7)))): Unit)
+      val j1 = jobsOf(decide(store, "1", Seq(
+        (11L, textA, oneHot(0)), (21L, textBNear, oneHot(32)), (31L, textD, oneHot(0)),
+        (41L, textE, oneHot(45)))): Unit)
+      info(s"jobs per call: $j0, $j1")
+      j0 should be <= JobBudget
+      j1 should be <= JobBudget
+    } finally sc.removeSparkListener(listener)
   }
 
   it should "collapse uncheckpointed-restart duplicate ledger rows in decisions()" in {
