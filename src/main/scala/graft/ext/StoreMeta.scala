@@ -82,11 +82,12 @@ object StoreMeta {
     * silently read old data with new semantics ([[SignatureStore]]
     * keeps its own richer hash-format error message). */
   def writeBucketMeta(spark: SparkSession, path: String,
-      format: Int, buckets: Int): Unit = {
-    writeJson(spark, path, "metadata/v0/store.json",
-      s"""{"format":$format,"buckets":$buckets}""", overwrite = false)
-    ()
-  }
+      format: Int, buckets: Int): Unit =
+    // an existing file would win the no-overwrite rename anyway: skip
+    // the temp-file write the streaming stores would pay per trigger
+    if (!fs(spark, path).exists(new Path(s"$path/metadata/v0/store.json")))
+      writeJson(spark, path, "metadata/v0/store.json",
+        s"""{"format":$format,"buckets":$buckets}""", overwrite = false): Unit
 
   def readBucketMeta(spark: SparkSession, path: String,
       expectedFormat: Int): Int = {

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -39,13 +39,18 @@ object ArcaneLayout {
   private def fs(df: DataFrame, path: String): FileSystem =
     new Path(path).getFileSystem(df.sparkSession.sessionState.newHadoopConf())
 
-  private def listFilesRec(filesystem: FileSystem,
-      root: Path): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-    val it = filesystem.listFiles(root, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) buf += it.next()
-    buf.toSeq
-  }
+  /** Every data file under `root`, at any depth, skipping files named
+    * `_*` or `.*` (`.crc` checksums included): a recursive `listStatus`
+    * walk. Not `listFiles(root, true)`: each `LocatedFileStatus` it
+    * builds loads the file's permissions, which on a local file system
+    * without native IO forks an `ls` per file. */
+  private def listFilesRec(filesystem: FileSystem, root: Path): Seq[FileStatus] =
+    filesystem.listStatus(root).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory) listFilesRec(filesystem, s.getPath)
+      else if (n.startsWith("_") || n.startsWith(".")) Nil
+      else Seq(s)
+    }
 
   /** Map each staged data file under `tmpRoot` to its arcane-named
     * destination relative to `data/`, preserving any partition
@@ -54,8 +59,6 @@ object ArcaneLayout {
       schemaHash: String, ext: String): Seq[(Path, String)] = {
     val tmpUri = filesystem.makeQualified(tmpRoot).toUri
     listFilesRec(filesystem, tmpRoot)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
       .map { s =>
         val rel = tmpUri.relativize(filesystem.makeQualified(s.getPath).toUri).getPath
         val sub = rel.lastIndexOf('/') match {
@@ -241,13 +244,7 @@ object ArcaneLayout {
     // rewritten WITHIN its subdir, so partition pruning is unaffected
     val dataPath = new Path(dataDir)
     val snapshot =
-      if (!filesystem.exists(dataPath)) Seq.empty
-      else {
-        val it = filesystem.listFiles(dataPath, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-        while (it.hasNext) buf += it.next()
-        buf.toSeq.filter(_.isFile)
-      }
+      if (!filesystem.exists(dataPath)) Seq.empty else listFilesRec(filesystem, dataPath)
     val dataUri = filesystem.makeQualified(dataPath).toUri
     val groups = snapshot.flatMap { s =>
       NamePattern.findFirstMatchIn(s.getPath.getName).map { m =>

@@ -106,8 +106,12 @@ import graft.sinks.ArcaneLayout
   * holds. The cluster merge ([[graft.ext.ComponentStore.merge]], when
   * a cluster path is set) takes the in-memory verdict's drop edges and
   * collects the roots of their endpoints: at most one edge per dropped
-  * arrival, and one root per endpoint. Appends accumulate small files;
-  * [[compact]] is the maintenance pass.
+  * arrival, and one root per endpoint. A trigger is scheduled by its
+  * data dependencies, not as a chain: the three slice reads are
+  * planned at once on the driver (then read in one job), and the merge
+  * runs beside the verdict write and the admissions, which run
+  * together. Appends accumulate small files; [[compact]] is the
+  * maintenance pass.
   *
   * Exactly-once: decisions for batch B are written by OVERWRITE to
   * `decisions/batch=B` (replay rewrites the same rows), and store
@@ -115,7 +119,12 @@ import graft.sinks.ArcaneLayout
   * insert-if-absent filtering inside (a batch row already stored is
   * never written again) — a replayed epoch with the
   * marker present skips admission entirely; a crash mid-admission
-  * re-runs it where only the missing rows insert. (The one divergence
+  * re-runs it where only the missing rows insert. The cluster merge,
+  * running beside the admissions, commits under the cluster store's
+  * OWN `_commits/B` marker: a replay after a failed admission skips a
+  * merge that landed, and re-runs one that did not (the replayed
+  * verdict is the same, so either way the cluster state ends as one
+  * uninterrupted trigger leaves it). (The one divergence
   * window: a crash between partial table writes can admit a batch's
   * band rows in two attempts, giving within-batch rank order that
   * differs from the single-attempt order if the cap was nearly full.)
@@ -277,36 +286,26 @@ object StreamingDecision {
     // independent-actions pattern as the batch admissions below: a
     // takedown's latency is then the slowest patch, not the sum of
     // three small-job chains (VERDICT r12 #6: the sweep, measured as
-    // the delete phase, dominates the retraction rows)
-    val patchPool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
+    // the delete phase, dominates the retraction rows).
+    // A failed patch must NOT leak straggler siblings past this method:
+    // the enclosing lease releases on exit, and a task still between
+    // its verifyLease and rename when a new holder acquires would
+    // interleave rewrites — `concurrently` interrupts and DRAINS them
+    // first. A drain TIMEOUT means a straggler may still be renaming
+    // staged files: surface it as an operator error instead of silently
+    // racing the next writer — LeasePoisonedException makes
+    // withWriterLeaseFenced LEAVE the lease to TTL-expire, so the next
+    // writer waits out the straggler rather than acquiring into it
+    // (ADVICE r13)
+    concurrently(
       Seq(("hashes", "bkt", "owner_id"), ("bands", "bkt", "doc_id"),
         ("cells", "cell", "vec_id"))
-        .map { case (t, p, k) =>
-          patchPool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = patchArcane(t, p, k)
-          })
-        }
-        .foreach(_.get())
-    } finally {
-      // a failed patch must NOT leak straggler siblings past this
-      // method: the enclosing lease releases on exit, and a task still
-      // between its verifyLease and rename when a new holder acquires
-      // would interleave rewrites — interrupt and DRAIN before the
-      // lease can be released. A drain TIMEOUT means a straggler may
-      // still be renaming staged files: surface it as an operator
-      // error instead of silently racing the next writer —
-      // LeasePoisonedException makes withWriterLeaseFenced LEAVE the
-      // lease to TTL-expire, so the next writer waits out the
-      // straggler rather than acquiring into it (ADVICE r13)
-      patchPool.shutdownNow()
-      if (!patchPool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS))
-        throw new StoreMeta.LeasePoisonedException(
-          s"decision-store patch pool for $path failed to drain within 120s " +
-            "after interrupt: a wedged patch task may still be writing — " +
-            "leaving the writer lease to TTL-expire; resolve the wedged job " +
-            "and re-run the takedown under a fresh lease")
-    }
+        .map { case (t, p, k) => s"patch-$t" -> (() => patchArcane(t, p, k)) },
+      stuck = Some(() => new StoreMeta.LeasePoisonedException(
+        s"decision-store patch pool for $path failed to drain within 120s " +
+          "after interrupt: a wedged patch task may still be writing — " +
+          "leaving the writer lease to TTL-expire; resolve the wedged job " +
+          "and re-run the takedown under a fresh lease"))): Unit
 
     // ledger purge: patch the touched batch partitions in place
     val touchedB = raw.join(broadcast(ids), Seq("doc_id"), "left_semi")
@@ -645,40 +644,91 @@ object StreamingDecision {
     if (batch.isEmpty || !StoreMeta.fs(spark, dir).exists(new Path(dir))) None
     else {
       val bc = spark.sparkContext.broadcast(batch)
-      val touched = udf((k: K) => bc.value.contains(k))
-      val rowsOf = udf((k: K) => bc.value(k))
-      val folded = spark.read.schema(schema).parquet(dir)
-        .filter(col(partCol).isin(parts: _*) && touched(col(keyCol)))
-        .withColumn("__b", rowsOf(col(keyCol)))
-        .select(col(keyCol), col(idCol),
-          exists(col("__b"), r => r("_1") === col(idCol)),
-          transform(filter(col("__b"), hit), r => r("_1")))
-        .rdd.mapPartitions { rows =>
-          val keeper = mutable.HashMap.empty[Long, Long]
-          val stored = mutable.HashMap.empty[Any, Int]
-          val present = mutable.HashSet.empty[(Any, Long)]
-          rows.foreach { r =>
-            val (key, m) = (r.get(0), r.getLong(1))
-            stored(key) = stored.getOrElse(key, 0) + 1
-            if (r.getBoolean(2)) present += key -> m
-            else r.getSeq[Long](3).foreach(d => keeper(d) = math.min(keeper.getOrElse(d, m), m))
+      try {
+        val touched = udf((k: K) => bc.value.contains(k))
+        val rowsOf = udf((k: K) => bc.value(k))
+        val folded = spark.read.schema(schema).parquet(dir)
+          .filter(col(partCol).isin(parts: _*) && touched(col(keyCol)))
+          .withColumn("__b", rowsOf(col(keyCol)))
+          .select(col(keyCol), col(idCol),
+            exists(col("__b"), r => r("_1") === col(idCol)),
+            transform(filter(col("__b"), hit), r => r("_1")))
+          .rdd.mapPartitions { rows =>
+            val keeper = mutable.HashMap.empty[Long, Long]
+            val stored = mutable.HashMap.empty[Any, Int]
+            val present = mutable.HashSet.empty[(Any, Long)]
+            rows.foreach { r =>
+              val (key, m) = (r.get(0), r.getLong(1))
+              stored(key) = stored.getOrElse(key, 0) + 1
+              if (r.getBoolean(2)) present += key -> m
+              else r.getSeq[Long](3).foreach(d => keeper(d) = math.min(keeper.getOrElse(d, m), m))
+            }
+            Iterator(Probe(keeper.toMap, stored.toMap, present.toSet))
           }
-          Iterator(Probe(keeper.toMap, stored.toMap, present.toSet))
-        }
-      Some(Slice(folded, bc))
+        Some(Slice(folded, bc))
+      } catch { case e: Throwable => bc.destroy(); throw e }
     }
 
-  /** Read every tier's slice ONCE, all in ONE Spark job (their
-    * partitions are scheduled together), and merge each tier's
-    * partition results on the driver: one [[Probe]] per tier, in order.
-    * The verdict and that tier's admission both derive from it. */
-  private def probe(spark: SparkSession, tiers: Seq[Option[Slice]]): Seq[Probe] =
+  /** Plan every tier's slice read at once — each `plans` entry is a
+    * labelled [[slice]] call, and the plans share nothing: a file index,
+    * UDFs over the slice's own broadcast, `.rdd` planning —, then read
+    * every slice ONCE, all in ONE Spark job (their partitions are
+    * scheduled together), and merge each tier's partition results on
+    * the driver: one [[Probe]] per tier, in order. The verdict and that
+    * tier's admission both derive from it. Every broadcast a plan made
+    * is destroyed on the way out, a failed sibling plan's included. */
+  private def probe(spark: SparkSession,
+      plans: Seq[(String, () => Option[Slice])]): Seq[Probe] = {
+    val planned = new java.util.concurrent.ConcurrentLinkedQueue[Slice]()
     try {
+      val tiers = concurrently(plans.map { case (label, plan) =>
+        label -> (() => { val s = plan(); s.foreach(planned.add); s })
+      })
       val tagged = tiers.zipWithIndex.collect { case (Some(s), i) => s.folded.map(i -> _) }
       val got = if (tagged.isEmpty) Array.empty[(Int, Probe)]
         else spark.sparkContext.union(tagged).collect()
       tiers.indices.map(i => got.collect { case (`i`, p) => p }.foldLeft(NoProbe)(_ ++ _))
-    } finally tiers.flatten.foreach(_.batch.destroy())
+    } finally planned.asScala.foreach(_.batch.destroy())
+  }
+
+  /** Run independent driver actions at once, one thread each, and
+    * return their results in order; `beside` runs on the calling thread
+    * meanwhile and is never interrupted. The first failure, an action's
+    * or `beside`'s, interrupts the actions still running (Spark cancels
+    * a job whose submitting thread is interrupted) and drains them
+    * before it is rethrown, so no action is still touching the store
+    * when the caller sees it. A failed action surfaces as `decision
+    * <label> failed`; when the drain outlasts 120 s, `stuck` is thrown
+    * instead, if given. */
+  private def concurrently[A](actions: Seq[(String, () => A)],
+      beside: () => Unit = () => (),
+      stuck: Option[() => Throwable] = None): Seq[A] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, actions.size))
+    def drain(): Unit = {
+      pool.shutdownNow()
+      if (!pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS))
+        stuck.foreach(s => throw s())
+    }
+    try {
+      val running = actions.map { case (label, f) =>
+        label -> pool.submit(new java.util.concurrent.Callable[A] {
+          override def call(): A = f()
+        })
+      }
+      try beside() catch { case e: Throwable => drain(); throw e }
+      running.map { case (label, f) =>
+        try f.get()
+        catch { case e: Throwable =>
+          drain()
+          throw (e match {
+            case x: java.util.concurrent.ExecutionException =>
+              new RuntimeException(s"decision $label failed", x.getCause)
+            case _ => e
+          })
+        }
+      }
+    } finally pool.shutdown()
+  }
 
   /** Sequential cap fill of one tier: the batch's rows not yet stored,
     * ranked per key by arrival id after the key's stored rows
@@ -704,8 +754,8 @@ object StreamingDecision {
     * (hash, band keys, cell), each tier's touched store slice is read
     * once by [[probe]], and the verdict and every admission are
     * assembled on the driver from those results, then written as
-    * independent single-partition jobs. The returned frame is that
-    * in-memory verdict. */
+    * independent single-partition jobs while the cluster merge runs
+    * beside them. The returned frame is that in-memory verdict. */
   def processBatch(batch: DataFrame, idCol: String, textCol: String,
       embCol: Option[String], path: String,
       centroids: Seq[(Long, Array[Double])], batchKey: String,
@@ -722,10 +772,14 @@ object StreamingDecision {
       tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         TextOps.tokens): DataFrame = {
     val spark = batch.sparkSession
+    val t0 = System.nanoTime()
+    // each phase's time and its start within the call, so the log shows
+    // which phases overlap
     def phase[A](label: String)(f: => A): A =
       if (sys.props.contains("graft.timing") || sys.env.contains("GRAFT_TIMING")) {
         val s = System.nanoTime(); val r = f
-        System.err.println(f"[dec-phase] $batchKey $label: ${(System.nanoTime() - s) / 1e9}%.2f s"); r
+        System.err.println(f"[dec-phase] $batchKey $label: ${(System.nanoTime() - s) / 1e9}%.2f s" +
+          f" (from +${(s - t0) / 1e9}%.2f s)"); r
       } else f
     graft.functions.GraftFunctions.register(spark)
     writeMeta(spark, path, nBuckets)
@@ -821,23 +875,25 @@ object StreamingDecision {
       val byHash = live.groupBy(_.h)
       val bandRows = for (a <- live; (bk, bkt) <- a.bands) yield (bk, bkt, a)
       val vecs = if (semOn) live.filter(_.cell.nonEmpty) else Nil
+      def plan(table: String)(s: => Option[Slice]) =
+        s"plan-$table" -> (() => phase(s"plan-$table")(s))
       val Seq(hashes, nearP, semP) = phase("probe") {
         probe(spark, Seq(
-          slice(spark, s"$path/hashes/data", hashesSchema, "bkt",
+          plan("hashes")(slice(spark, s"$path/hashes/data", hashesSchema, "bkt",
             live.map(_.hBkt).distinct, "h", "owner_id",
-            byHash.map { case (h, as) => h -> as.map(a => Tuple1(a.id)) })(_ => lit(true)),
-          slice(spark, s"$path/bands/data", bandsSchema, "bkt",
+            byHash.map { case (h, as) => h -> as.map(a => Tuple1(a.id)) })(_ => lit(true))),
+          plan("bands")(slice(spark, s"$path/bands/data", bandsSchema, "bkt",
             bandRows.map(_._2).distinct, "bk", "doc_id",
             bandRows.groupBy(_._1).map { case (bk, rs) => bk -> rs.map(r => (r._3.id, r._3.sig)) }) {
             r => size(filter(zip_with(r("_2"), col("sig"), (x, y) => x === y), v => v)) >=
               minSigMatch
-          },
-          slice(spark, s"$path/cells/data", cellsSchema, "cell",
+          }),
+          plan("cells")(slice(spark, s"$path/cells/data", cellsSchema, "cell",
             vecs.map(_.cell.get).distinct, "cell", "vec_id",
             vecs.groupBy(_.cell.get).map { case (c, as) => c -> as.map(a => (a.id, a.emb, a.nrm)) }) {
             r => round(call_function("graft_vector_dot", r("_2"), col("emb"))
               / (r("_3") * col("nrm")) * lit(10000.0)).cast("long") >= minScoreE4
-          }))
+          })))
       }
 
       // ---- verdict: tombstone > exact > near > semantic > quality
@@ -880,66 +936,59 @@ object StreamingDecision {
             cellsSchema, "cell"))
           .filter(_._2.nonEmpty)
 
-      // The verdict write and the admissions are INDEPENDENT Spark jobs
-      // (verdict is replay-idempotent overwrite; admissions derive from
-      // pre-batch store state) — run them CONCURRENTLY from the driver,
-      // the standard Spark pattern for independent actions. Each writes
-      // driver-held rows from ONE partition, so none is a wide job.
-      val jobs: Seq[(String, () => Unit)] =
-        ("decisions-write" -> (() =>
-          dec.coalesce(1).write.mode("overwrite")
-            .parquet(s"$path/decisions/batch=$batchKey"))) +:
-          admits.map { case (table, rows, schema, part) =>
-            s"admit-$table" -> (() => appendTable(local(spark, rows, schema).coalesce(1),
-              s"$path/$table", Seq(part)))
-          }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
-      try {
-        jobs.map { case (label, job) =>
-          label -> pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = phase(label)(job())
-          })
-        }.foreach { case (label, f) =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            // Cancel the SIBLING jobs before rethrowing (ADVICE r11):
-            // the store must not receive admissions after the caller
-            // has already seen the failure. shutdownNow interrupts the
-            // worker threads (Spark cancels a job whose submitting
-            // thread is interrupted) and awaitTermination drains them,
-            // so the thrown exception implies no further store writes
-            // are in flight. Replay stays marker-guarded either way.
-            pool.shutdownNow()
-            pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-            throw new RuntimeException(s"decision $label failed", e.getCause) }
-        }
-      } finally pool.shutdown()
-
-      // marker LAST, after every table (and the verdict) landed
-      if (!admitted) {
-        fs.mkdirs(new Path(s"$path/_commits"))
-        fs.create(marker, true).close()
-      }
-
       // ---- arrival-time CLUSTER STATE (round 11): every drop verdict
       // is a verified (doc, keeper) duplicate pair — merged into the
       // persisted union-find forest, so TRANSITIVE canonical labels
       // (A≈B≈C with A≉C — what the per-arrival keeper deliberately
       // does not give) are maintained incrementally, O(batch + touched
-      // roots) per micro-batch, never a corpus-wide recompute. Guarded
-      // by ComponentStore's own commit marker AND naturally idempotent
-      // (a replayed batch re-derives identical decisions, and re-merged
-      // pairs contract to (root, root)).
-      clusterPath.foreach { cp =>
+      // roots) per micro-batch, never a corpus-wide recompute. The
+      // merge reads only the in-memory verdict, so it runs beside the
+      // store writes below. Guarded by ComponentStore's own commit
+      // marker AND naturally idempotent (a replayed batch re-derives
+      // identical decisions, and re-merged pairs contract to
+      // (root, root)).
+      val merge = () => clusterPath.foreach { cp =>
         // self-keeper verdicts (drop_tombstone, drop_quality) are
         // policy drops, not duplicate EDGES — a (doc, doc) pair
         // carries no cluster information
         val pairs = dec.filter(col("decision") =!= "keep" &&
             col("doc_id") =!= col("keeper_id"))
           .select(col("doc_id"), col("keeper_id"))
-        graft.ext.ComponentStore.merge(pairs, "doc_id", "keeper_id", cp, batchKey)
-        graft.ext.ComponentStore.maybeCompact(spark, cp, clusterCompactEvery): Unit
+        phase("cluster-merge")(
+          graft.ext.ComponentStore.merge(pairs, "doc_id", "keeper_id", cp, batchKey))
       }
+
+      // The verdict write, the admissions and the cluster merge are
+      // INDEPENDENT (verdict is replay-idempotent overwrite; admissions
+      // derive from pre-batch store state; the merge from the verdict)
+      // — run them CONCURRENTLY from the driver, the standard Spark
+      // pattern for independent actions. Each write lands driver-held
+      // rows from ONE partition, so none is a wide job. The merge runs
+      // on this thread, where a failing write never interrupts it: its
+      // partition overwrite deletes each old `bkt=` directory before
+      // moving the new one in, and an interrupt between the two would
+      // lose rows. Any failure cancels and drains the writes still
+      // running before it is rethrown (ADVICE r11), so the store
+      // receives no admission after the caller has seen the failure;
+      // replay stays marker-guarded either way.
+      concurrently(
+        ("decisions-write" -> (() => phase("decisions-write")(
+          dec.coalesce(1).write.mode("overwrite")
+            .parquet(s"$path/decisions/batch=$batchKey")))) +:
+          admits.map { case (table, rows, schema, part) =>
+            s"admit-$table" -> (() => phase(s"admit-$table")(appendTable(
+              local(spark, rows, schema).coalesce(1), s"$path/$table", Seq(part))))
+          },
+        beside = merge)
+
+      // marker LAST, after every table (and the verdict) landed; the
+      // cluster merge committed under its own marker
+      if (!admitted) {
+        fs.mkdirs(new Path(s"$path/_commits"))
+        fs.create(marker, true).close()
+      }
+      clusterPath.foreach(cp =>
+        graft.ext.ComponentStore.maybeCompact(spark, cp, clusterCompactEvery): Unit)
       dec
     } finally {
       in.unpersist(); ()

@@ -99,6 +99,34 @@ class SinkLayoutSpec extends AnyFlatSpec with Matchers with SparkFixture {
     spark.read.parquet(s"$target/data").count() shouldBe 101
   }
 
+  behavior of "ArcaneLayout partitioned layout"
+
+  it should "land one arcane-named part per touched partition and compact within each" in {
+    import spark.implicits._
+    val target = tempDir("partitioned")
+    val NamePattern = "part-[0-9a-f-]+-[0-9a-f]{7}-chunk\\.parquet"
+    def batch(from: Long) = (from until from + 200L).map(i => (i, (i % 16).toInt))
+      .toDF("id", "bkt").coalesce(1)
+    def partitions = files(target, "data").sorted
+    ArcaneLayout.writeDataBatch(batch(0L), target, partitionColumns = Seq("bkt")): Unit
+    partitions shouldBe (0 until 16).map(k => s"bkt=$k").sorted
+    all(partitions.map(p => files(target, s"data/$p"))) should have size 1
+    all(partitions.flatMap(p => files(target, s"data/$p"))) should fullyMatch regex NamePattern
+    new java.io.File(target).list().filter(_.startsWith(".staging-")) shouldBe empty
+
+    // a second batch doubles every partition's parts; compact folds each
+    // partition's two back into one, inside its own subdirectory
+    ArcaneLayout.writeDataBatch(batch(200L), target, partitionColumns = Seq("bkt")): Unit
+    all(partitions.map(p => files(target, s"data/$p"))) should have size 2
+    ArcaneLayout.compact(spark, target, targetRecordsPerFile = 1000L) should have size 16
+    partitions shouldBe (0 until 16).map(k => s"bkt=$k").sorted
+    (0 until 16).foreach { k =>
+      files(target, s"data/bkt=$k") should have size 1
+      val ids = spark.read.parquet(s"$target/data/bkt=$k").as[Long].collect()
+      ids.sorted.toSeq shouldBe (0L until 400L).filter(_ % 16 == k)
+    }
+  }
+
   behavior of "ArcaneLayoutReader (the consumer contract)"
 
   it should "gate on the token, then merge duplicates by key and apply deletes" in {

@@ -378,6 +378,58 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
       .as[(Long, Long)].collect().toMap shouldBe stored
   }
 
+  /** Fault injection: the first trigger on a fresh store fails because
+    * a regular file sits where `obstacle` (a path under the case's root)
+    * expects a directory. Once the file is gone, the same batch key is
+    * replayed and a second batch follows; verdicts, store row counts and
+    * cluster components must then equal an uninterrupted run's. Returns
+    * the failure. */
+  private def failThenReplay(obstacle: String): Throwable = {
+    import spark.implicits._
+    val b0 = Seq((10L, textA, oneHot(0)), (12L, textA, oneHot(1)), (20L, textB, oneHot(32)))
+    val b1 = Seq((11L, textA, oneHot(2)), (21L, textBNear, oneHot(33)),
+      (31L, textD, oneHot(32)), (41L, textE, oneHot(45)))
+    def decideAt(root: String, key: String, rows: Seq[(Long, String, Seq[Float])]) =
+      StreamingDecision.processBatch(df(rows), "doc_id", "text", Some("embedding"),
+        s"$root/decision", cents, key, clusterPath = Some(s"$root/clusters")).count()
+    def stateOf(root: String) = (
+      StreamingDecision.decisions(spark, s"$root/decision")
+        .select("doc_id", "decision", "keeper_id").as[(Long, String, Long)].collect().toSet,
+      Seq("hashes", "bands", "cells")
+        .map(t => t -> spark.read.parquet(s"$root/decision/$t/data").count()).toMap,
+      graft.ext.ComponentStore.components(spark, s"$root/clusters")
+        .as[(Long, Long)].collect().toMap)
+
+    val clean = tempDir("dec-fault-clean")
+    decideAt(clean, "0", b0)
+    decideAt(clean, "1", b1)
+
+    val root = tempDir("dec-fault")
+    val blocker = new java.io.File(s"$root/$obstacle")
+    blocker.getParentFile.mkdirs()
+    blocker.createNewFile() shouldBe true
+    val failure = intercept[Exception](decideAt(root, "0", b0))
+    new java.io.File(s"$root/decision/_commits/0").exists() shouldBe false
+    blocker.delete() shouldBe true
+    decideAt(root, "0", b0)
+    decideAt(root, "1", b1)
+    val (verdicts, counts, comps) = stateOf(root)
+    (verdicts, counts, comps) shouldBe stateOf(clean)
+    verdicts should contain allOf ((12L, "drop_exact", 10L), (11L, "drop_exact", 10L),
+      (21L, "drop_near", 20L), (31L, "drop_semantic", 20L))
+    comps(12L) shouldBe comps(11L)
+    comps(31L) shouldBe comps(21L)
+    failure
+  }
+
+  it should "replay a trigger whose cluster merge failed to the uninterrupted state" in {
+    failThenReplay("clusters").getMessage should include("clusters")
+  }
+
+  it should "replay a trigger whose store admission failed to the uninterrupted state" in {
+    failThenReplay("decision/bands").getMessage should include("decision admit-bands failed")
+  }
+
   behavior of "StreamingDecision retraction (VERDICT r11 #1)"
 
   it should "re-adjudicate a deleted owner's duplicates and transfer hash ownership" in {
