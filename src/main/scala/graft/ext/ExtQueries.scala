@@ -2018,7 +2018,6 @@ object ExtQueries {
   // ------------------------------------------------------------------
 
   def simHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = emb(spark, dir).select("vec_id", "embedding", "label")
       .withColumn("nrm", Similarity.l2Norm("embedding"))
     val qs = e.filter(col("vec_id") < 10)
@@ -2029,7 +2028,7 @@ object ExtQueries {
     val scored = ns.join(broadcast(qs),
         col("query_id") =!= col("neighbor_id") && col("qlab") =!= col("neighbor_label"))
       .withColumn("score_e4",
-        round(expr("graft_vector_dot(qemb, nemb)") / (col("qnrm") * col("nnrm"))
+        round(Similarity.dot("qemb", "nemb") / (col("qnrm") * col("nnrm"))
           * 10000).cast("long"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score_e4").desc, col("neighbor_id").asc)
@@ -2781,7 +2780,6 @@ object ExtQueries {
     * instead of dying as a zero-token `drop_quality`. Same ledger
     * schema and stage precedence as pipeline_corpus_build_lang. */
   def pipelineCorpusBuildMulti(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     corpusBuildLedger(
       pureScriptDocs(spark, dir),
       emb(spark, dir).select("vec_id", "embedding"),
@@ -3712,10 +3710,9 @@ object ExtQueries {
   // ------------------------------------------------------------------
 
   def textRollingHash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     docs(spark, dir)
       .select(col("doc_id"), TextOps.normalized(col("text")).as("norm"))
-      .select(col("doc_id"), expr("graft_rolling_hash(norm)").as("rhash"))
+      .select(col("doc_id"), graft.functions.GraftFunctions.rollingHash(col("norm")).as("rhash"))
       .orderBy("doc_id")
   }
 
@@ -4224,7 +4221,6 @@ object ExtQueries {
       else df
 
   def pipelineCorpusBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     corpusBuildLedger(
       docs(spark, dir).select("doc_id", "source", "text"),
       emb(spark, dir).select("vec_id", "embedding"),
@@ -4236,7 +4232,6 @@ object ExtQueries {
   /** The classifier-gated build (VERDICT r14 #4): same chain, the
     * bootstrapped 5-feature LDA as the quality gate. */
   def pipelineCorpusBuildClf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     corpusBuildLedger(
       docs(spark, dir).select("doc_id", "source", "text"),
       emb(spark, dir).select("vec_id", "embedding"),
@@ -4253,7 +4248,6 @@ object ExtQueries {
     * fallback path too. `drop_lang` sits between `drop_contaminated`
     * and `drop_mix` — the hosted streaming build's precedence. */
   def pipelineCorpusBuildLang(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     corpusBuildLedger(
       docs(spark, dir).select("doc_id", "source", "text"),
       emb(spark, dir).select("vec_id", "embedding"),
@@ -4311,7 +4305,6 @@ object ExtQueries {
       hitsImpl: Option[(DataFrame, DataFrame) => DataFrame] = None,
       tok: Column => Column = TextOps.tokens,
       keeperMode: String = "min"): DataFrame = {
-    graft.functions.GraftFunctions.register(d0.sparkSession)
     // 1+2: normalize, wrap in the synthetic page, extract prose blocks
     val ext0 = phase("normalize_extract", extractStageOf(d0))
     val bench = Dedup.shingleRows(
@@ -5105,7 +5098,6 @@ object ExtQueries {
         .otherwise(col("text")).as("text"))
 
   def textQualityClassifierMl(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val tok: Column => Column = TextOps.tokensU
     val model = LangId.trainLocal(MlSeeds)
     val d = mlMixDocs(spark, dir)
@@ -5503,7 +5495,6 @@ object ExtQueries {
   private def dirtySuffix = "  é nd\r\nok "
 
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = docs(spark, dir).select("doc_id", "text")
     val dirty = d.filter(pmod(col("doc_id"), lit(8)) === 0)
       .select((col("doc_id") + 9000000L).as("doc_id"),
@@ -6777,7 +6768,6 @@ object ExtQueries {
   private val corpusBuildStreamDirCache = scala.collection.mutable.Map.empty[String, String]
 
   def streamingCorpusBuildGolden(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d0 = docs(spark, dir).select("doc_id", "source", "text")
     val ext0 = d0.select(col("doc_id"), col("source"),
       TextOps.htmlExtract(

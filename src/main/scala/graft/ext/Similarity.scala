@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Embedding-similarity search over `array<float>` columns (VERDICT r1
   * rank 0; SURVEY.md §7.1 module 7).
   *
@@ -31,7 +33,7 @@ object Similarity {
     * expression (one fused primitive loop; the portable
     * `zip_with`/`aggregate` fold it replaces is interpreted and ~10×
     * slower per row, with bit-identical results). */
-  def dot(a: String, b: String): Column = expr(s"graft_vector_dot($a, $b)")
+  def dot(a: String, b: String): Column = GraftFunctions.vectorDot(col(a), col(b))
 
   def l2Norm(a: String): Column = sqrt(dot(a, a))
 
@@ -86,14 +88,12 @@ object Similarity {
   def signBucketKeys(embCol: String, bits: Int, tables: Int): Column =
     array((0 until tables).map(t => signBucketTable(embCol, t, bits)): _*)
 
-  /** Normalize to (id, embedding, nrm) with the L2 norm precomputed.
-    * Registers the native vector expressions on the session — every
-    * similarity entry point funnels through here. */
-  def withNorm(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+  /** Normalize to (id, embedding, nrm) with the L2 norm precomputed
+    * by the native [[graft.functions.VectorDot]]; the frame works on
+    * any session, nothing registered. */
+  def withNorm(df: DataFrame, idCol: String, embCol: String): DataFrame =
     df.select(col(idCol), col(embCol).as("embedding"))
       .withColumn("nrm", l2Norm("embedding"))
-  }
 
   private def scored(q: DataFrame, n: DataFrame, joinCond: Column): DataFrame =
     q.alias("q").join(n.alias("n"), joinCond)
@@ -163,7 +163,7 @@ object Similarity {
     * bit-identical results — same strict left-to-right double fold.
     * Mismatched-length or null-element inputs take VectorSqDist's
     * defensive prefix-fold semantics, see its scaladoc). */
-  def sqDist(a: String, b: String): Column = expr(s"graft_vector_sqdist($a, $b)")
+  def sqDist(a: String, b: String): Column = GraftFunctions.vectorSqDist(col(a), col(b))
 
   /** IVF cell assignment: nearest of the (broadcast) centroid set by
     * squared L2, ties to the lowest centroid id. The cross join is
@@ -349,7 +349,7 @@ object Similarity {
         .as(Seq("s", "semb")))
   }
 
-  private def pqSubSqDist = expr("graft_vector_sqdist(semb, cemb)")
+  private def pqSubSqDist = sqDist("semb", "cemb")
 
   /** Nearest codebook entry per (id, subspace) over exploded sub-rows:
     * (id, s, semb, cell). The codebook is broadcast (m × codebookK
@@ -377,7 +377,6 @@ object Similarity {
   private[graft] def trainPqCodebooks(corpus: DataFrame, idCol: String,
       embCol: String, dim: Int, m: Int, codebookK: Int, iters: Int,
       sampleFraction: Double = 1.0): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val corpusSub = pqSubRows(corpus, idCol, embCol, dim, m)
     val trainSub =
       if (sampleFraction >= 1.0) corpusSub
@@ -412,7 +411,6 @@ object Similarity {
     * query, broadcast-sized. */
   private[graft] def pqAdcTables(queries: DataFrame, cents: DataFrame,
       idCol: String, embCol: String, dim: Int, m: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     pqSubRows(queries, idCol, embCol, dim, m)
       .select(col(idCol).as("query_id"), col("s"), col("semb"))
       .join(broadcast(cents), "s")
@@ -424,7 +422,6 @@ object Similarity {
       embCol: String, dim: Int, m: Int, codebookK: Int,
       iters: Int, sampleFraction: Double = 1.0): (DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val cents = trainPqCodebooks(corpus, idCol, embCol, dim, m, codebookK, iters, sampleFraction)
     val codes = pqAssign(pqSubRows(corpus, idCol, embCol, dim, m), cents, idCol)
       .select(col(idCol).as("neighbor_id"), col("s"), col("cell"))
@@ -490,14 +487,13 @@ object Similarity {
     * by exact distance: (query_id, neighbor_id, cell, dist_e6, rnk). */
   def rerankExact(approx: DataFrame, queries: DataFrame, corpus: DataFrame,
       idCol: String, embCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val pairs = approx.select(col("query_id"), col("neighbor_id"), col("cell"))
     val n = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("nemb"))
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("qemb"))
     val exact = n.join(broadcast(pairs), "neighbor_id")
       .join(broadcast(q), "query_id")
       .withColumn("dist_e6",
-        round(expr("graft_vector_sqdist(qemb, nemb)") * 1e6).cast("long"))
+        round(sqDist("qemb", "nemb") * 1e6).cast("long"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("dist_e6").asc, col("neighbor_id").asc)
     exact.withColumn("rnk", row_number().over(w).cast("long"))
@@ -550,7 +546,6 @@ object Similarity {
       codebookK: Int, k: Int, nProbe: Int = 2, iters: Int = 1,
       sampleFraction: Double = 1.0, rerankC: Int = 0): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = if (rerankC > 0) rerankC else 4 * k
     val subDim = dim / m
     val asgN = assignCells(corpus, centroids, idCol, embCol)

@@ -85,7 +85,7 @@ object TextOps {
       }
     // bounded SECOND pass: repairs triple encodings (VERDICT r13 #5)
     val repaired = repairOnce(repairOnce(text))
-    val nfc = call_function("graft_nfc", repaired)
+    val nfc = graft.functions.GraftFunctions.nfc(repaired)
     val noCtl = regexp_replace(nfc,
       "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")
     val lf = regexp_replace(noCtl, "\\r\\n|\\r", "\n")

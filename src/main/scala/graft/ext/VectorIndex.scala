@@ -213,7 +213,6 @@ object VectorIndex {
     // encode keeping the admitted code's squared distance: the drift
     // metric rides the SAME pass that produces the codes (no extra
     // scan; `rows` is batch-sized and cached across the two actions)
-    graft.functions.GraftFunctions.register(spark)
     val w = Window.partitionBy(col("neighbor_id"), col("s"))
       .orderBy(col("dist").asc, col("cid").asc)
     val assigned = Similarity.pqSubRows(admitted, idCol, embCol, dim, m)
@@ -544,7 +543,6 @@ object VectorIndex {
       idCol: String, embCol: String, labelCol: String,
       k: Int, nProbe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // codeless index (total takedown / fully-tombstoned rebuild): no
     // candidates exist — serve empty with the contract schema, with
     // the label column typed from the corpus frame
@@ -580,7 +578,7 @@ object VectorIndex {
     nside.join(broadcast(qside), Seq("query_id"))
       .filter(col("qlab") =!= col("neighbor_label"))
       .withColumn("score_e4",
-        round(expr("graft_vector_dot(qemb, nemb)") / (col("qnrm") * col("nnrm"))
+        round(Similarity.dot("qemb", "nemb") / (col("qnrm") * col("nnrm"))
           * 10000).cast("long"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)

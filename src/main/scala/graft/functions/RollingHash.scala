@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,26 +55,4 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
-}
-
-/** Session registration for the engine's native expressions. Idempotent
-  * — safe to call from every query lambda: a session whose registry
-  * already holds every `graft_*` name is left as it is, so per-trigger
-  * callers neither replace the functions nor log a replacement warning
-  * each time. */
-object GraftFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_rolling_hash" -> (exprs => RollingHash(exprs.head)),
-    "graft_vector_dot" -> (exprs => VectorDot(exprs(0), exprs(1))),
-    "graft_vector_sqdist" -> (exprs => VectorSqDist(exprs(0), exprs(1))),
-    "graft_nfc" -> (exprs => NfcNormalize(exprs.head)),
-    "graft_nfkc" -> (exprs => NfkcNormalize(exprs.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!builders.forall { case (name, _) => registry.functionExists(FunctionIdentifier(name)) })
-      builders.foreach { case (name, build) =>
-        registry.createOrReplaceTempFunction(name, build, "scala_udf")
-      }
-  }
 }

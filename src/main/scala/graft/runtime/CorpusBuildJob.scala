@@ -690,7 +690,6 @@ object CorpusBuildJob {
     val finTok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       if (finTokensMode == "unicode") graft.ext.TextOps.tokensU
       else graft.ext.TextOps.tokens
-    graft.functions.GraftFunctions.register(spark) // extraction uses graft_nfc
     val ledgerPath = s"$store/build_ledger"
     require(graft.ext.StoreMeta.fs(spark, ledgerPath)
         .exists(new org.apache.hadoop.fs.Path(ledgerPath)),

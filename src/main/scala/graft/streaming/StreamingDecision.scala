@@ -14,7 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ext.{Dedup, StoreMeta, TextOps}
+import graft.functions.GraftFunctions
 import graft.sinks.ArcaneLayout
+import graft.streaming.StreamingDedup.{Bands, RowsPerBand, ShingleN, SigSlots}
 
 /** The STREAMING DECISION SURFACE (VERDICT r10 #2): every dedup tier
   * streams individually ([[StreamingDedup]]), but an ingest deployment
@@ -46,7 +48,7 @@ import graft.sinks.ArcaneLayout
   *    makes the original the duplicate), or by a smaller-id doc in the
   *    same batch (the whole group is decided together, the
   *    [[StreamingDedup.exactDupStream]] rule). Keeper = the owner.
-  *  - '''drop_near''': ≥ `minSigMatch` of k MinHash slots agree with a
+  *  - '''drop_near''': ≥ `minSigMatch` of the 12 MinHash slots agree with a
   *    stored band-bucket member from an EARLIER batch (prior-members
   *    only — pairs within one micro-batch are never near-claimed,
   *    the batch-vs-corpus rule every tier shares). Keeper = the
@@ -132,6 +134,10 @@ import graft.sinks.ArcaneLayout
 object StreamingDecision {
 
   val FormatVersion = 1
+
+  /** Committed cluster merges between two compactions of the
+    * `clusterPath` forest. */
+  private val ClusterCompactEvery = 64
 
   private val hashesSchema = StructType(Seq(
     StructField("h", StringType), StructField("owner_id", LongType),
@@ -360,8 +366,6 @@ object StreamingDecision {
       embCol: Option[String], batchCol: String, path: String,
       centroids: Seq[(Long, Array[Double])],
       minSigMatch: Int = 8, minScoreE4: Long = 3000L,
-      k: Int = 12, bands: Int = 4, rowsPerBand: Int = 3,
-      shingleN: Int = 3,
       qualityFits: Seq[graft.ext.QualityClassifier.FeatureFit] = Nil,
       qualityStop: Seq[String] = Nil,
       qualityLm: Option[graft.ext.QualityClassifier.LmModel] = None,
@@ -369,7 +373,6 @@ object StreamingDecision {
       tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         TextOps.tokens): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val b = buckets(spark, path)
     val semOn = embCol.nonEmpty && centroids.nonEmpty
     val baseCols = Seq(col(idCol).cast("long").as("doc_id"),
@@ -420,8 +423,8 @@ object StreamingDecision {
             .as("ex_keeper"))
 
       // ---- near tier ---------------------------------------------
-      val exdIn = Dedup.shingleRows(in, "doc_id", "text", shingleN, tok)
-      val projIn = Dedup.minhashFromShingles(exdIn, "doc_id", k, bands, rowsPerBand)
+      val exdIn = Dedup.shingleRows(in, "doc_id", "text", ShingleN, tok)
+      val projIn = Dedup.minhashFromShingles(exdIn, "doc_id", SigSlots, Bands, RowsPerBand)
       val bandIn = projIn
         .select(col("doc_id"), col("sig"), explode(col("bands")).as("bk"))
         .withColumn("bkt", bktOf(col("bk"), b))
@@ -460,7 +463,7 @@ object StreamingDecision {
             .filter(col("m_ep").isNotNull && col("m_ep") < col("ep") &&
               col("m_id") =!= col("doc_id"))
             .withColumn("score_e4",
-              round(call_function("graft_vector_dot", col("emb"), col("m_emb"))
+              round(GraftFunctions.vectorDot(col("emb"), col("m_emb"))
                 / (col("nrm") * col("m_nrm")) * lit(10000.0)).cast("long"))
             .filter(col("score_e4") >= minScoreE4)
             .groupBy("doc_id").agg(min("m_id").as("sem_keeper"))
@@ -476,7 +479,7 @@ object StreamingDecision {
       // quality-gated deployment
       val qFailR: DataFrame =
         qualityFailSet(in.select("doc_id", "text"), qualityFits, qualityStop,
-          shingleN, qualityLm, qualityLmBroadcast, tok)
+          qualityLm, qualityLmBroadcast, tok)
       val dec = in.select("doc_id", "batch")
         .join(broadcast(ex), Seq("doc_id"), "left")
         .join(broadcast(nearK), Seq("doc_id"), "left")
@@ -558,7 +561,7 @@ object StreamingDecision {
     * ([[graft.ext.QualityClassifier.withLmFeature]]), so streaming
     * verdicts match the batch classifier bit for bit (VERDICT r14 #5 —
     * the stream/batch gate divergence closed instead of pinned). Docs
-    * without shingle support (`size(tokens) < shingleN`) are never
+    * without shingle support (`size(tokens) < ShingleN`) are never
     * SCORED — they fail the tier outright, exactly the batch gate's
     * exclusion rule (both corpusBuildLedger modes drop them): before
     * this (ADVICE r15) the stream silently KEPT them, an undocumented
@@ -567,11 +570,10 @@ object StreamingDecision {
     * Empty `qualityFits` disables the tier. */
   private def qualityFailSet(in: DataFrame,
       qualityFits: Seq[graft.ext.QualityClassifier.FeatureFit],
-      qualityStop: Seq[String], shingleN: Int,
+      qualityStop: Seq[String],
       qualityLm: Option[graft.ext.QualityClassifier.LmModel],
       qualityLmBroadcast: Boolean,
-      tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        TextOps.tokens): DataFrame = {
+      tok: Column => Column): DataFrame = {
     val spark = in.sparkSession
     if (qualityFits.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -580,7 +582,7 @@ object StreamingDecision {
     else {
       import graft.ext.QualityClassifier
       val base = QualityClassifier.withLocalFeatures(
-        in.select("doc_id", "text"), "text", qualityStop, shingleN, tok)
+        in.select("doc_id", "text"), "text", qualityStop, ShingleN, tok)
       val (feats, cols) = qualityLm match {
         case Some(lm) =>
           require(qualityFits.size == QualityClassifier.FeatureCols.size,
@@ -761,9 +763,7 @@ object StreamingDecision {
       centroids: Seq[(Long, Array[Double])], batchKey: String,
       minSigMatch: Int = 8, maxBucket: Int = 64,
       minScoreE4: Long = 3000L, maxCell: Int = 64,
-      k: Int = 12, bands: Int = 4, rowsPerBand: Int = 3, shingleN: Int = 3,
       nBuckets: Int = 16, clusterPath: Option[String] = None,
-      clusterCompactEvery: Int = 64,
       enforceTombstones: Boolean = true,
       qualityFits: Seq[graft.ext.QualityClassifier.FeatureFit] = Nil,
       qualityStop: Seq[String] = Nil,
@@ -781,7 +781,6 @@ object StreamingDecision {
         System.err.println(f"[dec-phase] $batchKey $label: ${(System.nanoTime() - s) / 1e9}%.2f s" +
           f" (from +${(s - t0) / 1e9}%.2f s)"); r
       } else f
-    graft.functions.GraftFunctions.register(spark)
     writeMeta(spark, path, nBuckets)
     val b = buckets(spark, path)
 
@@ -819,7 +818,7 @@ object StreamingDecision {
       // once. The signature is the per-row MinHash form
       // (Dedup.minhashSigOnce), equal value for value to the explode →
       // min aggregate; band keys exist only with shingle support
-      // (size(tokens) ≥ shingleN).
+      // (size(tokens) ≥ ShingleN).
       val semCols =
         if (semOn) Seq(when(col("embedding").isNotNull, col("cell")).as("cell"),
           col("emb"), col("nrm"))
@@ -829,10 +828,10 @@ object StreamingDecision {
         (if (semOn) StreamingDedup.withSemCell(in, "doc_id", "embedding", centroids) else in)
           .select(Seq(col("doc_id"), tomb.as("tomb"), tok(col("text")).as("toks")) ++ semCols: _*)
           .withColumn("h", Dedup.contentHashWith(identity)(col("toks")))
-          .withColumn("sig", when(size(col("toks")) >= shingleN,
-            Dedup.minhashSigOnce(TextOps.shingles(col("toks"), shingleN), k)))
+          .withColumn("sig", when(size(col("toks")) >= ShingleN,
+            Dedup.minhashSigOnce(TextOps.shingles(col("toks"), ShingleN), SigSlots)))
           .withColumn("bands", when(col("sig").isNotNull,
-            Dedup.lshBandKeys(col("sig"), bands, rowsPerBand)))
+            Dedup.lshBandKeys(col("sig"), Bands, RowsPerBand)))
           .select(col("doc_id"), col("tomb"), col("h"), bktOf(col("h"), b), col("sig"),
             col("bands"), transform(col("bands"), bk => bktOf(bk, b)),
             col("cell"), col("emb"), col("nrm"))
@@ -860,7 +859,7 @@ object StreamingDecision {
       val qFail: Set[Long] =
         if (qualityFits.isEmpty || live.isEmpty) Set.empty
         else phase("quality") {
-          qualityFailSet(in.filter(!tomb), qualityFits, qualityStop, shingleN, qualityLm,
+          qualityFailSet(in.filter(!tomb), qualityFits, qualityStop, qualityLm,
             qualityLmBroadcast, tok)
             .select("doc_id").collect().map(_.getLong(0)).toSet
         }
@@ -891,7 +890,7 @@ object StreamingDecision {
           plan("cells")(slice(spark, s"$path/cells/data", cellsSchema, "cell",
             vecs.map(_.cell.get).distinct, "cell", "vec_id",
             vecs.groupBy(_.cell.get).map { case (c, as) => c -> as.map(a => (a.id, a.emb, a.nrm)) }) {
-            r => round(call_function("graft_vector_dot", r("_2"), col("emb"))
+            r => round(GraftFunctions.vectorDot(r("_2"), col("emb"))
               / (r("_3") * col("nrm")) * lit(10000.0)).cast("long") >= minScoreE4
           })))
       }
@@ -988,7 +987,7 @@ object StreamingDecision {
         fs.create(marker, true).close()
       }
       clusterPath.foreach(cp =>
-        graft.ext.ComponentStore.maybeCompact(spark, cp, clusterCompactEvery): Unit)
+        graft.ext.ComponentStore.maybeCompact(spark, cp, ClusterCompactEvery): Unit)
       dec
     } finally {
       in.unpersist(); ()

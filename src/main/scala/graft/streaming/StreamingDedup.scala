@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ext.{Dedup, TextOps}
+import graft.functions.GraftFunctions
 
 /** An incoming doc flagged against an already-stored corpus doc. */
 case class NearDupHit(docId: Long, matchedDocId: Long, nSigMatch: Int)
@@ -130,11 +131,12 @@ case class ExactState(owner: Option[Long], lastSeenMs: Long,
 object StreamingDedup {
 
   // the near tier's band projection: k = 12 MinHash slots over word
-  // 3-shingles, 4 bands × 3 rows — the batch dedup_incremental geometry
-  private val SigSlots = 12
-  private val Bands = 4
-  private val RowsPerBand = 3
-  private val ShingleN = 3
+  // 3-shingles, 4 bands × 3 rows — the batch dedup_incremental geometry,
+  // and the band layout of StreamingDecision's stores
+  private[streaming] val SigSlots = 12
+  private[streaming] val Bands = 4
+  private[streaming] val RowsPerBand = 3
+  private[streaming] val ShingleN = 3
 
   /** Exact-dup hits: state keyed by [[Dedup.contentHash]] (the engine's
     * one exact-dup definition — sha-256 of normalized text, shared with
@@ -260,18 +262,16 @@ object StreamingDedup {
     * float coords in index order, the engine-wide convention. */
   private[streaming] def withSemCell(vecs: DataFrame, idCol: String, embCol: String,
       centroids: Seq[(Long, Array[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val distStructs = centroids.sortBy(_._1).map { case (cid, ce) =>
       struct(
-        call_function("graft_vector_sqdist", col("emb"),
-          typedLit(ce.toSeq)).as("d"),
+        GraftFunctions.vectorSqDist(col("emb"), typedLit(ce.toSeq)).as("d"),
         lit(cid).as("cid"))
     }
     vecs
       .withColumn("emb", col(embCol))
       .withColumn("cell", array_min(array(distStructs: _*)).getField("cid"))
       .withColumn("nrm",
-        sqrt(call_function("graft_vector_dot", col("emb"), col("emb"))))
+        sqrt(GraftFunctions.vectorDot(col("emb"), col("emb"))))
       .withColumn("vecId", col(idCol).cast("long"))
   }
 

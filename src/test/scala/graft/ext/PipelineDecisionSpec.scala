@@ -154,7 +154,6 @@ class PipelineDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture {
     val ungated = vmap(ExtQueries.pipelineCorpusBuild(spark, dir))
     gated.keySet shouldBe ungated.keySet
 
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "source", "text")
     // corp = extracted docs past the fixture benchmark boundary (20)

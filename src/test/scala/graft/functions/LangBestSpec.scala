@@ -77,7 +77,6 @@ class LangBestSpec extends AnyFlatSpec with Matchers with SparkFixture {
     // single-reference index form must stay at a handful of clones
     // (one per pushdown site), and the ARRAY scorer must not appear
     // in this plan at all
-    graft.functions.GraftFunctions.register(spark)
     val plan = graft.ext.ExtQueries
       .queries("pipeline_corpus_build_lang")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString

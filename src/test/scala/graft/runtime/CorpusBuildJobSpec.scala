@@ -651,7 +651,6 @@ class CorpusBuildJobSpec extends AnyFlatSpec with Matchers with SparkFixture {
     // the stream consumes AND what finalize re-reads: EXTRACT=false)
     // and the benchmark shingle set, both derived with the batch
     // build's own stage code
-    graft.functions.GraftFunctions.register(spark)
     val ext = graft.ext.ExtQueries.extractStageOf(docsRaw)
     val corpDir = tempDir("cfin-docs-ext")
     ext.filter(col("doc_id") >= 20L)
@@ -793,7 +792,6 @@ class CorpusBuildJobSpec extends AnyFlatSpec with Matchers with SparkFixture {
           fwhen(col("doc_id") % 10 === i, flit(1.0f)).otherwise(flit(0.0f))): _*)
           .as("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(embDir)
-    graft.functions.GraftFunctions.register(spark)
     val ext = graft.ext.ExtQueries.extractStageOf(docsRaw)
     val corpDir = tempDir("clang-docs-ext")
     ext.filter(col("doc_id") >= 20L)
@@ -942,7 +940,6 @@ class CorpusBuildJobSpec extends AnyFlatSpec with Matchers with SparkFixture {
     vb(21L) shouldBe "keep"
 
     // the STREAM with langProfilePath: same verdicts per doc
-    graft.functions.GraftFunctions.register(spark)
     val ext = graft.ext.ExtQueries.extractStageOf(docsRaw)
     val corpDir = tempDir("clangp-docs-ext")
     ext.filter(col("doc_id") >= 20L)
