@@ -31,6 +31,11 @@ trait StreamGraphBuilder {
   *  - SchemaMismatchException ⇒ report + exit SUCCESS so the operator
   *    restarts the stream in backfill mode
   *  - SchemaInconsistentException ⇒ exit RESTART; anything else FATAL
+  *
+  * A failure is classified by the first schema exception on its cause
+  * chain, so a fault raised inside the running query (a micro-batch's
+  * drift check, the sink's frozen-schema check, a DSv2 source's drift
+  * probe) gets the same code as one raised while building the graph.
   */
 final class StreamRunner(
     spark: SparkSession,
@@ -89,20 +94,33 @@ final class StreamRunner(
         ExitCodes.Success
       }
     } catch {
-      case e: SchemaMismatchException =>
-        // drift is an expected lifecycle event: tell the operator to
-        // restart us in backfill mode (reference annotates the k8s Job:
-        // arcane/state=schema-mismatch) and exit cleanly
-        statusReporter(s"schema-mismatch: ${e.getMessage}")
-        ExitCodes.Success
-      case e: SchemaInconsistentException =>
-        statusReporter(s"schema-inconsistent: ${e.getMessage}")
-        ExitCodes.Restart
-      case NonFatal(e) =>
-        statusReporter(s"fatal: ${e.getMessage}")
-        ExitCodes.Fatal
+      case NonFatal(e) => schemaFault(e) match {
+        case Some(m: SchemaMismatchException) =>
+          // drift is an expected lifecycle event: tell the operator to
+          // restart us in backfill mode (reference annotates the k8s Job:
+          // arcane/state=schema-mismatch) and exit cleanly
+          statusReporter(s"schema-mismatch: ${m.getMessage}")
+          ExitCodes.Success
+        case Some(i) =>
+          statusReporter(s"schema-inconsistent: ${i.getMessage}")
+          ExitCodes.Restart
+        case None =>
+          statusReporter(s"fatal: ${e.getMessage}")
+          ExitCodes.Fatal
+      }
     }
   }
+
+  /** The first schema fault on `e`'s cause chain. A fault raised inside
+    * a running query reaches `awaitTermination` wrapped in a
+    * `StreamingQueryException` (and, from `foreachBatch`, a second
+    * Spark wrapper), so the exception's own type says nothing; the
+    * depth bound guards against a cyclic chain. */
+  private def schemaFault(e: Throwable): Option[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).find {
+      case _: SchemaMismatchException | _: SchemaInconsistentException => true
+      case _ => false
+    }
 }
 
 /** `rows.incoming`-style metrics via StreamingQueryListener (reference:

@@ -73,8 +73,8 @@ object ArcaneLayout {
     * metadata no-op per file on HDFS-likes, but a copy on object
     * stores — parallelism bounds the commit latency at O(files / 16)
     * round-trips instead of O(files). ExecutionExceptions are
-    * unwrapped so Supervision.isTransient still sees the underlying
-    * IOException, not the pool's wrapper. */
+    * unwrapped so callers, and the stream host's failure report, see
+    * the underlying IOException, not the pool's wrapper. */
   private def parallelRename(filesystem: FileSystem, dataDir: String,
       toMove: Seq[(Path, String)]): Seq[String] = {
     toMove.map(_._2).map(n => new Path(s"$dataDir/$n").getParent).distinct
@@ -102,7 +102,7 @@ object ArcaneLayout {
             // next to the retry's output
             pool.shutdownNow()
             pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-            // unwrap so Supervision.isTransient sees the IOException,
+            // unwrap so callers and StreamRunner see the IOException,
             // not the pool's wrapper
             throw Option(e.getCause).getOrElse(e)
         })

@@ -5,10 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Blob/file-listing source (reference:
   * src/Sources/BlobStorage/BlobStorageSource.cs:19-139; SURVEY.md §2.1
-  * S5): emits object names under a prefix, re-listed per poll. The
-  * reference emits bare names forever on an interval; we expose the
-  * listing as a DataFrame of (name, size, modificationTime) so
-  * downstream filters (prefix/suffix/modifiedAfter) stay declarative.
+  * S5): the object names under a prefix. The reference re-emits bare
+  * names forever on an interval; we expose one listing as a DataFrame
+  * of (name, size, modificationTime) so downstream filters
+  * (prefix/suffix/modifiedAfter) stay declarative. A continuous feed of
+  * new objects is Spark's own file-stream source, whose checkpointed
+  * file log replaces the re-list loop.
   *
   * Scale note: the listing itself is driver-side (as in the reference —
   * it's a metadata operation), but is immediately parallelized as a
@@ -33,26 +35,5 @@ object BlobListingSource {
       }
     }
     blobs.result().toDF()
-  }
-
-  /** Names only — the reference's exact emission shape. */
-  def listNames(spark: SparkSession, prefix: String): DataFrame =
-    list(spark, prefix).select("name")
-
-  /** Poll loop: re-list every `intervalMillis`, invoke `onBatch` with
-    * the listing (the reference never completes; bound with
-    * `maxPolls` >= 0 for tests / backfill-style runs). */
-  def poll(
-      spark: SparkSession,
-      prefix: String,
-      intervalMillis: Long,
-      maxPolls: Long = Long.MaxValue)(onBatch: DataFrame => Unit): Unit = {
-    require(intervalMillis > 0, "changeCaptureInterval must be positive")
-    var i = 0L
-    while (i < maxPolls) {
-      onBatch(list(spark, prefix))
-      i += 1
-      if (i < maxPolls) Thread.sleep(intervalMillis)
-    }
   }
 }

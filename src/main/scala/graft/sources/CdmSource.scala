@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.Constants
 import graft.ops.ColumnOps
@@ -38,11 +38,11 @@ final class CdmSource(
     rootPath: String,
     entityName: String) {
 
-  private def hadoopFs: FileSystem =
-    new Path(rootPath).getFileSystem(spark.sessionState.newHadoopConf())
+  private def fsOf(p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 
   private def readText(p: Path): String = {
-    val in = hadoopFs.open(p)
+    val in = fsOf(p).open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
@@ -89,7 +89,7 @@ final class CdmSource(
   def backfill(): DataFrame = {
     val feed = feedSchema()
     val outputColumns = feed.fieldNames.toSeq :+ Constants.MergeKeyColumn
-    val fs = hadoopFs
+    val fs = fsOf(new Path(rootPath))
     val prefix = s"${entityName.toUpperCase}_"
     val files = {
       val b = Vector.newBuilder[Path]
@@ -146,12 +146,30 @@ final class CdmSource(
     ColumnOps.withMergeKeyFrom(raw, "RECID")
   }
 
-  /** Schema-drift poll: re-read the feed schema and compare to the
+  /** Schema-drift check: re-read the feed schema and compare to the
     * frozen one; throws SchemaMismatchException on change (reference:
-    * CdmChangeFeedSource.cs:374-404). The runner calls this per
-    * schemaUpdateInterval tick. */
+    * CdmChangeFeedSource.cs:374-404). The hosted `cdm` kind calls it at
+    * the start of every micro-batch, before the write. */
   def checkDrift(frozen: StructType): Unit =
     SchemaOps.requireNoDrift(frozen, feedSchema())
+
+  /** The feed schema a stream on `checkpoint` checks drift against,
+    * kept at `<checkpoint>/feed-schema.json`. `refreeze` (a backfill)
+    * freezes the current declaration; otherwise the one the checkpoint
+    * already holds stays, so a stream restarted on it still stops for
+    * drift that happened while it was down. */
+  def frozenFeedSchema(checkpoint: String, refreeze: Boolean): StructType = {
+    val p = new Path(checkpoint, "feed-schema.json")
+    val fs = fsOf(p)
+    if (!refreeze && fs.exists(p))
+      DataType.fromJson(readText(p)).asInstanceOf[StructType]
+    else {
+      val schema = feedSchema()
+      val out = fs.create(p, true)
+      try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      schema
+    }
+  }
 }
 
 object CdmSource {

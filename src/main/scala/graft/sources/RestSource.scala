@@ -337,9 +337,11 @@ object RestSource {
 }
 
 /** Raised when a page stays transiently unavailable (429/408) past the
-  * bounded retry budget. Extends TimeoutException so the supervision
-  * decider treats it as retry-the-stream, matching the reference's
-  * restart-on-timeout policy (RestApiSource.cs:355-361). */
+  * bounded retry budget. The page retries happen in place (see
+  * [[RestSource]]); past them the exception fails the running query,
+  * which the stream host maps to exit FATAL. Unlike the reference's
+  * restart-on-timeout decider (RestApiSource.cs:355-361), nothing
+  * retries the stream itself. */
 final class TransientFetchException(uri: String, attempts: Int)
     extends java.util.concurrent.TimeoutException(
       s"page unavailable after $attempts attempts: $uri")

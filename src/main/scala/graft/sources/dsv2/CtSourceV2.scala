@@ -21,8 +21,8 @@ import graft.sources.ChangeTrackingQueries
   * src/Sources/SqlServer/SqlServerChangeTrackingSource.cs:31): offsets
   * are CT VERSIONS in Spark's checkpoint WAL, so recovery, progress
   * reporting and exactly-once-per-version batch planning all ride the
-  * engine's own commit protocol — no side-car offset files, unlike the
-  * driver-loop [[graft.sources.ChangeTrackingPoller]].
+  * engine's own commit protocol — no side-car offset files and no
+  * poll loop outside the query.
   *
   * {{{
   * spark.readStream
@@ -42,8 +42,7 @@ import graft.sources.ChangeTrackingQueries
   *    trigger, never a delta query.
   *  - Each batch is the BOUNDED window (startVersion, endVersion]
   *    ([[ChangeTrackingQueries.selectDeltaBounded]]): WAL replay after a
-  *    crash re-reads exactly the same rows even if the server moved on —
-  *    the unbounded driver-loop delta can't promise that.
+  *    crash re-reads exactly the same rows even if the server moved on.
   *  - A batch fans out over `numStripes` executor tasks, each pulling a
   *    disjoint PK-checksum stripe of the delta concurrently; the heavy
   *    part (base-table row fetch per changed PK) parallelizes.
@@ -163,8 +162,9 @@ object CtTableV2 {
   }
 
   /** Full output schema: base columns (PK first) + CT change metadata +
-    * frame version + merge key — the same surface the driver-loop
-    * source delivers, so sinks are interchangeable. */
+    * frame version + merge key — the same surface the full load
+    * ([[ChangeTrackingQueries.selectAll]]) delivers, so one sink takes
+    * the snapshot and the stream. */
   def outputSchema(props: util.Map[String, String]): StructType = {
     val (pk, nonPk) = baseFields(props)
     StructType(pk ++ nonPk ++ Seq(
@@ -290,7 +290,7 @@ final class CtMicroBatchStream(props: util.Map[String, String])
     * columns. Probed via INFORMATION_SCHEMA on the driver; a mismatch
     * fails the stream with [[graft.model.SchemaMismatchException]],
     * which the operator exit-code contract maps to a backfill restart
-    * (the CDM source's DriftTicker behavior, extended to CT — the
+    * (the CDM kind's per-batch drift check, extended to CT — the
     * reference only probes columns at stage start). */
   private def checkSchema(): Unit = {
     val server = driverGateway

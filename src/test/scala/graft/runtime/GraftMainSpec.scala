@@ -1,5 +1,6 @@
 package graft.runtime
 
+import org.scalatest.LoneElement
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -39,10 +40,19 @@ class MainSpecCtServer extends graft.sources.dsv2.CtGateway {
   }
 }
 
+/** [[MainSpecCtServer]] after the table gained a column: its
+  * INFORMATION_SCHEMA column probe no longer matches the declared DDL. */
+class MainSpecDriftedCtServer extends MainSpecCtServer {
+  override def rows(sql: String): Iterator[Seq[Any]] =
+    if (sql.contains("INFORMATION_SCHEMA.COLUMNS"))
+      Iterator(Seq[Any]("id"), Seq[Any]("total"), Seq[Any]("discount"))
+    else super.rows(sql)
+}
+
 /** The composition root driven exactly the way the operator drives a
   * stream pod: STREAMCONTEXT__* environment → kind dispatch →
   * backfill lifecycle → arcane layout + exit code. */
-class GraftMainSpec extends AnyFlatSpec with Matchers with SparkFixture {
+class GraftMainSpec extends AnyFlatSpec with Matchers with LoneElement with SparkFixture {
 
   behavior of "GraftMain (env-contract hosting program)"
 
@@ -89,6 +99,27 @@ class GraftMainSpec extends AnyFlatSpec with Matchers with SparkFixture {
     rows.count() shouldBe 2
     rows.columns should contain allOf ("id", "total", "SYS_CHANGE_VERSION",
       "SYS_CHANGE_OPERATION", "ChangeTrackingVersion", "ARCANE_MERGE_KEY")
+  }
+
+  it should "report a drifted CT table as schema-mismatch and exit SUCCESS" in {
+    val target = tempDir("graftmain-ct-drift-sink")
+    val spec =
+      s"""{
+         |  "gatewayClass": "${classOf[MainSpecDriftedCtServer].getName}",
+         |  "schemaName": "dbo", "tableName": "orders",
+         |  "pkColumns": "id", "schemaDdl": "id BIGINT, total DOUBLE",
+         |  "startVersion": "0", "validateSchemaEvery": 1,
+         |  "sinkPath": "$target",
+         |  "checkpointPath": "${tempDir("graftmain-ct-drift-ckpt")}",
+         |  "stopAfterBackfill": true
+         |}""".stripMargin
+    val reports = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the probe fails the running query; the operator must see drift
+    // (relaunch in backfill), not a fatal fault
+    GraftMain.run(spark, env("ct", spec), statusReporter = reports += _) shouldBe
+      ExitCodes.Success
+    reports.loneElement should startWith("schema-mismatch:")
+    ArcaneLayoutReader.isComplete(spark, target) shouldBe false
   }
 
   it should "host the dedup-decision surface under the same operator contract" in {

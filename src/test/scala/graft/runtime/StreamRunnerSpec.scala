@@ -5,6 +5,7 @@ import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming._
+import org.scalatest.LoneElement
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -16,9 +17,9 @@ import graft.model._
   * ParquetSinkTests' COMPLETED-token suppression assertions
   * (ParquetSinkTests.cs:174-310, Times.Never on interruption). A
   * controllable fake query makes every interruption path
-  * deterministic; real streaming queries are exercised by the CDM
-  * end-to-end spec. */
-class StreamRunnerSpec extends AnyFlatSpec with Matchers with SparkFixture {
+  * deterministic; real rate-stream queries whose micro-batches throw
+  * pin the exit code of a fault raised inside a running query. */
+class StreamRunnerSpec extends AnyFlatSpec with Matchers with LoneElement with SparkFixture {
 
   /** StreamingQuery stub: terminates when completed or stopped. */
   private final class FakeQuery(sparkSession0: SparkSession) extends StreamingQuery {
@@ -111,6 +112,52 @@ class StreamRunnerSpec extends AnyFlatSpec with Matchers with SparkFixture {
   it should "map anything else to FATAL" in {
     val b = new ScriptedBuilder(buildThrows = Some(new RuntimeException("boom")))
     newRunner(b).run(ctx(backfill = false), b) shouldBe ExitCodes.Fatal
+  }
+
+  /** A real rate stream whose every micro-batch throws `fault`: the
+    * fault reaches the runner wrapped by Spark, not as itself. */
+  private final class FailingBatchBuilder(fault: Throwable) extends StreamGraphBuilder {
+    var completedCount = 0
+    override def build(ctx: StreamContext, spark: SparkSession): DataFrame =
+      spark.readStream.format("rate").option("rowsPerSecond", "10").load()
+    override def start(ctx: StreamContext, df: DataFrame, trigger: Trigger): StreamingQuery =
+      df.writeStream
+        .foreachBatch { (_: DataFrame, _: Long) => throw fault }
+        .option("checkpointLocation", tempDir("runner-fault-ckpt"))
+        .trigger(trigger).start()
+    override def onCompleted(ctx: StreamContext): Unit = completedCount += 1
+  }
+
+  /** Run `fault` through a real query; (exit code, statuses, tokens). */
+  private def runFailing(fault: Throwable): (Int, Seq[String], Int) = {
+    val b = new FailingBatchBuilder(fault)
+    val statuses = scala.collection.mutable.ListBuffer[String]()
+    val code = new StreamRunner(spark, java.time.Duration.ofMillis(100), statuses += _)
+      .run(ctx(backfill = false), b)
+    (code, statuses.toList, b.completedCount)
+  }
+
+  behavior of "StreamRunner exit codes for faults inside a running query"
+
+  it should "map a micro-batch's schema inconsistency to RESTART" in {
+    val (code, statuses, tokens) = runFailing(new SchemaInconsistentException("arity 3 vs 4"))
+    code shouldBe ExitCodes.Restart
+    statuses shouldBe Seq("schema-inconsistent: arity 3 vs 4")
+    tokens shouldBe 0
+  }
+
+  it should "map a micro-batch's schema mismatch to SUCCESS with a schema-mismatch status" in {
+    val (code, statuses, tokens) = runFailing(new SchemaMismatchException("feed drifted"))
+    code shouldBe ExitCodes.Success
+    statuses shouldBe Seq("schema-mismatch: feed drifted")
+    tokens shouldBe 0
+  }
+
+  it should "map any other micro-batch fault to FATAL" in {
+    val (code, statuses, tokens) = runFailing(new RuntimeException("blob storage down"))
+    code shouldBe ExitCodes.Fatal
+    statuses.loneElement should startWith("fatal: ")
+    tokens shouldBe 0
   }
 
   behavior of "backfill-then-stream flip"

@@ -5,45 +5,10 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.model.{StreamContext, StreamSpec}
 
-/** Supervision deciders, rate limiting, drift ticker, and the typed
-  * spec codecs (reference: restart deciders
-  * SqlServerChangeTrackingSource.cs:225-229 / RestApiSource.cs:355-361,
-  * Polly policy RestApiSource.cs:444-447, UnixTimeConverter.cs:12-22,
+/** Rate limiting and the typed spec codecs (reference: Polly policy
+  * RestApiSource.cs:444-447, UnixTimeConverter.cs:12-22,
   * SecondsToTimeSpanConverter.cs:12-21). */
 class SupervisionSpec extends AnyFlatSpec with Matchers {
-
-  behavior of "Supervision.withRestarts"
-
-  it should "restart on timeout/IO faults and eventually succeed" in {
-    var calls = 0
-    val out = Supervision.withRestarts(maxRestarts = 3, sleep = _ => ()) {
-      calls += 1
-      if (calls < 3) throw new java.util.concurrent.TimeoutException("slow")
-      "ok"
-    }
-    out shouldBe "ok"
-    calls shouldBe 3
-  }
-
-  it should "fail fast on non-transient faults" in {
-    var calls = 0
-    an[IllegalStateException] should be thrownBy
-      Supervision.withRestarts(maxRestarts = 3, sleep = _ => ()) {
-        calls += 1
-        throw new IllegalStateException("bug")
-      }
-    calls shouldBe 1
-  }
-
-  it should "propagate a transient fault once the budget is exhausted" in {
-    var calls = 0
-    a[java.io.IOException] should be thrownBy
-      Supervision.withRestarts(maxRestarts = 2, sleep = _ => ()) {
-        calls += 1
-        throw new java.io.IOException("conn reset")
-      }
-    calls shouldBe 3 // initial + 2 restarts
-  }
 
   behavior of "TokenBucket"
 
@@ -64,21 +29,6 @@ class SupervisionSpec extends AnyFlatSpec with Matchers {
     nanos += 10L * 1000000000L // 10s ≫ burst
     (1 to 2).foreach(_ => bucket.tryAcquire() shouldBe true)
     bucket.tryAcquire() shouldBe false
-  }
-
-  behavior of "DriftTicker"
-
-  it should "invoke onDrift exactly once and stop ticking" in {
-    val drifts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val checks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val ticker = new DriftTicker(20,
-      () => { if (checks.incrementAndGet() >= 3) throw new RuntimeException("drift") },
-      _ => drifts.incrementAndGet())
-    ticker.start()
-    Thread.sleep(400)
-    ticker.stop()
-    drifts.get() shouldBe 1
-    checks.get() shouldBe 3 // stopped after the throwing check
   }
 
   behavior of "StreamSpec codecs"

@@ -3,22 +3,21 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.LoneElement
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkFixture
 import graft.model._
-import graft.runtime.{CdmStreamGraphBuilder, StreamRunner}
-import graft.sinks.{ArcaneParquetSink, SinkConfig}
 
 /** End-to-end CDM pipeline over a generated SampleData-style layout —
   * the Scala analogue of the reference's CdmChangeFeedSourceTests
   * (backfill/incremental/total row counts 11/8/19, the shape of
   * CdmChangeFeedSourceTests.cs:33-35) plus the full sink-layout and
-  * COMPLETED-token matrix (ParquetSinkTests.cs:174-310) through a real
-  * Structured Streaming query.
+  * COMPLETED-token matrix (ParquetSinkTests.cs:174-310) through the
+  * hosted `cdm` kind (`GraftMain.run`).
   */
-class CdmEndToEndSpec extends AnyFlatSpec with Matchers with SparkFixture {
+class CdmEndToEndSpec extends AnyFlatSpec with Matchers with LoneElement with SparkFixture {
 
   private val entity = "Widget"
 
@@ -147,30 +146,40 @@ class CdmEndToEndSpec extends AnyFlatSpec with Matchers with SparkFixture {
       Option(d.listFiles()).map(_.map(_.getName).toSeq).getOrElse(Nil)
         .filterNot(_.startsWith("."))
     }
-    (ls("data"), ls("schema"), dir.listFiles().map(_.getName).toSeq.filterNot(_.startsWith(".")))
+    (ls("data"), ls("schema"), ls(""))
+  }
+
+  /** Run the hosted `cdm` kind over `root` the way the operator does:
+    * STREAMCONTEXT__* env → GraftMain.run. A backfill stops after the
+    * drain; a stream runs until it fails or is stopped. */
+  private def runCdm(root: String, sink: String, ckpt: String, backfill: Boolean,
+      statuses: String => Unit = _ => ()): Int = {
+    val spec =
+      s"""{"rootPath": "$root", "entityName": "$entity",
+         | "sinkPath": "$sink", "checkpointPath": "$ckpt",
+         | "stopAfterBackfill": true}""".stripMargin
+    graft.runtime.GraftMain.run(spark, Map(
+      StreamContext.StreamIdVar -> "cdm-e2e",
+      StreamContext.StreamKindVar -> "cdm",
+      StreamContext.BackfillVar -> backfill.toString,
+      StreamContext.SpecVar -> spec), statusReporter = statuses)
   }
 
   it should "drain the feed, write the full layout, and publish one token on graceful completion" in {
     val root = writeFixture()
     val target = tempDir("cdm-sink")
-    val cdm = CdmSource(spark, root, entity)
-    val sink = new ArcaneParquetSink(SinkConfig(target))
-    val builder = new CdmStreamGraphBuilder(cdm, sink, tempDir("cdm-ckpt"),
-      schemaUpdateIntervalMillis = 200)
-    val runner = new StreamRunner(spark, statusReporter = _ => ())
-
     // AvailableNow drains every change-feed file then terminates
-    runner.run(StreamContext("cdm-s1", "cdm", isBackfilling = true, "{}"),
-      builder) shouldBe ExitCodes.Success
+    runCdm(root, target, tempDir("cdm-ckpt"), backfill = true) shouldBe ExitCodes.Success
 
     val (data, schemaFiles, rootFiles) = layout(target)
-    val hash = sink.schemaHash.get
+    val tokens = rootFiles.filter(_.endsWith(".COMPLETED"))
+    tokens.size shouldBe 1
+    val hash = tokens.head.stripSuffix(".COMPLETED")
     hash.length shouldBe 7 // the SAME short hash everywhere
     data should not be empty
     all(data) should (startWith("part-") and endWith(s"-$hash-chunk.parquet"))
     schemaFiles.size shouldBe 1
     schemaFiles.head should (startWith("schema-") and endWith(s"-$hash.parquet"))
-    rootFiles should contain(s"$hash.COMPLETED")
     // the written rows round-trip with the merge key
     val written = spark.read.parquet(s"$target/data")
     written.count() shouldBe 8
@@ -179,43 +188,41 @@ class CdmEndToEndSpec extends AnyFlatSpec with Matchers with SparkFixture {
 
   it should "suppress the token when the stream fails" in {
     val root = writeFixture()
-    val target = tempDir("cdm-sink-fail")
-    val cdm = CdmSource(spark, root, entity)
-    // a sink whose writes blow up mid-stream
-    val sink = new ArcaneParquetSink(SinkConfig(target)) {
-      override def writeBatch(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        throw new RuntimeException("blob storage down")
-    }
-    val builder = new CdmStreamGraphBuilder(cdm, sink, tempDir("cdm-ckpt-fail"))
-    val runner = new StreamRunner(spark, statusReporter = _ => ())
-    runner.run(StreamContext("cdm-s2", "cdm", isBackfilling = true, "{}"),
-      builder) shouldBe ExitCodes.Fatal
-    val (_, _, rootFiles) = layout(target)
-    rootFiles.filter(_.endsWith(".COMPLETED")) shouldBe empty // Times.Never
+    val dir = tempDir("cdm-sink-fail")
+    // a regular file where the sink expects its directory: the first
+    // micro-batch's write fails
+    val target = s"$dir/sink"
+    Files.writeString(Paths.get(target), "not a directory")
+    val statuses = scala.collection.mutable.ListBuffer[String]()
+    runCdm(root, target, tempDir("cdm-ckpt-fail"), backfill = true,
+      statuses += _) shouldBe ExitCodes.Fatal
+    statuses.loneElement should startWith("fatal: ")
+    Files.isRegularFile(Paths.get(target)) shouldBe true
+    new java.io.File(dir).list().filter(_.endsWith(".COMPLETED")) shouldBe empty // Times.Never
   }
 
   it should "stop on drift mid-stream, exit SUCCESS, and never publish the token" in {
     val root = writeFixture()
     val target = tempDir("cdm-sink-drift")
-    val cdm = CdmSource(spark, root, entity)
-    val sink = new ArcaneParquetSink(SinkConfig(target))
-    val builder = new CdmStreamGraphBuilder(cdm, sink, tempDir("cdm-ckpt-drift"),
-      schemaUpdateIntervalMillis = 150)
+    val ckpt = tempDir("cdm-ckpt-drift")
+    // the backfill drains batch1.csv and freezes the feed schema
+    runCdm(root, target, ckpt, backfill = true) shouldBe ExitCodes.Success
+    val (_, _, before) = layout(target)
+    before.count(_.endsWith(".COMPLETED")) shouldBe 1
+
+    // the feed declaration gains a column, and a file in the new shape lands
+    Files.writeString(Paths.get(s"$root/ChangeFeed/$entity.cdm.json"), driftedFeedCdmJson)
+    Files.writeString(Paths.get(s"$root/ChangeFeed/$entity/batch2.csv"),
+      s""""0XA9",,"INSERT","0XS9","0XFF",999,drifted,63,extra""")
+
+    // the stream on the same checkpoint checks the new batch before writing it
     val statuses = scala.collection.mutable.ListBuffer[String]()
-    val runner = new StreamRunner(spark,
-      processingInterval = java.time.Duration.ofMillis(200),
-      statusReporter = statuses += _)
-
-    // drift the declared schema while the ProcessingTime stream runs
-    new Thread(() => {
-      Thread.sleep(1500)
-      Files.writeString(Paths.get(s"$root/ChangeFeed/$entity.cdm.json"), driftedFeedCdmJson)
-    }).start()
-
-    runner.run(StreamContext("cdm-s3", "cdm", isBackfilling = false, "{}"),
-      builder) shouldBe ExitCodes.Success
-    statuses.exists(_.contains("schema-mismatch")) shouldBe true
-    val (_, _, rootFiles) = layout(target)
-    rootFiles.filter(_.endsWith(".COMPLETED")) shouldBe empty
+    runCdm(root, target, ckpt, backfill = false, statuses += _) shouldBe ExitCodes.Success
+    statuses.loneElement should startWith("schema-mismatch: ")
+    val (_, _, after) = layout(target)
+    after.filter(_.endsWith(".COMPLETED")) shouldBe before.filter(_.endsWith(".COMPLETED"))
+    val written = spark.read.parquet(s"$target/data")
+    written.count() shouldBe 8
+    written.filter(col("RECID") === 999L).count() shouldBe 0
   }
 }

@@ -26,16 +26,6 @@ class CtSqlShapeSpec extends AnyFlatSpec with Matchers {
       "tq.[a] = ct.[a] and tq.[b] = ct.[b]"
   }
 
-  it should "generate the delta query with CHANGETABLE pushdown and CT metadata" in {
-    val sql = ChangeTrackingQueries.selectDelta("dbo", "orders",
-      Seq("id"), Seq("total"), lastVersion = 42L)
-    sql should include("RIGHT JOIN (SELECT ct.* FROM CHANGETABLE(CHANGES [dbo].[orders], 42) ct) ct")
-    sql should include("ct.[id], tq.[total], ct.SYS_CHANGE_VERSION, ct.SYS_CHANGE_OPERATION")
-    sql should include("CHANGE_TRACKING_CURRENT_VERSION() AS ChangeTrackingVersion")
-    sql should include("AS ARCANE_MERGE_KEY")
-    sql should include("ON tq.[id] = ct.[id]")
-  }
-
   it should "generate the full-load query with literal change metadata" in {
     val sql = ChangeTrackingQueries.selectAll("dbo", "orders", Seq("id"), Seq("total"))
     sql should include("0 AS SYS_CHANGE_VERSION")
@@ -49,6 +39,11 @@ class CtSqlShapeSpec extends AnyFlatSpec with Matchers {
       Seq("id"), Seq("total"), fromVersion = 42L, toVersion = 99L,
       partitionExpression = None, stripe = 2, numStripes = 4)
     sql should include("CHANGETABLE(CHANGES [dbo].[orders], 42) ct")
+    // the reference's delta template: PKs from the change side, non-PKs
+    // from the base table, CT metadata passed through, PK match
+    sql should include("ct.[id], tq.[total], ct.SYS_CHANGE_VERSION, ct.SYS_CHANGE_OPERATION")
+    sql should include("AS ARCANE_MERGE_KEY")
+    sql should include("ON tq.[id] = ct.[id]")
     // the upper bound makes the batch deterministic under WAL replay
     sql should include("WHERE ct.SYS_CHANGE_VERSION <= 99")
     // the frame version is the batch's END OFFSET, not read-time state
@@ -66,8 +61,6 @@ class CtSqlShapeSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "seek versions from the commit table" in {
-    ChangeTrackingQueries.seekVersionAfter(7L) shouldBe
-      "SELECT MIN(commit_ts) FROM sys.dm_tran_commit_table WHERE commit_ts > 7"
     ChangeTrackingQueries.seekVersionByLookback(86400) should
       include("DATEADD(second, -86400, GETUTCDATE())")
   }
