@@ -17,7 +17,12 @@ import graft.model.ExitCodes
   *     invalidated docs;
   *  2. [[graft.streaming.StreamingDecision.readjudicate]] — re-verdict
   *     them in original arrival order against the healed stores
-  *     (content re-fed from the corpus path);
+  *     (content re-fed from the corpus path). The heal runs with the
+  *     DEFAULT tier settings — `TextOps.tokens`, `minSigMatch` 8,
+  *     `minScoreE4` 3000, no quality tier — whatever the stream's
+  *     `dedup-decision` spec set: the `RETRACT_*` contract carries none
+  *     of them, so a stream with other settings heals to verdicts it
+  *     would not have made;
   *  3. [[graft.streaming.StreamingDecision.healCluster]] — tombstone +
   *     touched-components-only rebuild of the union-find state;
   *  4. [[graft.ext.SignatureStore.delete]] /

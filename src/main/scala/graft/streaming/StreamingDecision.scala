@@ -33,11 +33,13 @@ import graft.streaming.StreamingDedup.{Bands, RowsPerBand, ShingleN, SigSlots}
   * key state by three different things (content hash / LSH band key /
   * coarse cell), and Spark restricts chaining `flatMapGroupsWithState`
   * operators in one query — so the composed verdict runs each
-  * micro-batch as BATCH joins against disk-backed stores (hive-
-  * partitioned parquet, the [[graft.ext.SignatureStore]] discipline),
-  * which also makes the corpus state durable, queryable, and shared
-  * with the batch/incremental paths rather than locked inside a
-  * streaming checkpoint.
+  * micro-batch as a BATCH read of the touched slices of disk-backed
+  * stores (hive-partitioned parquet, the [[graft.ext.SignatureStore]]
+  * discipline) with the verdict assembled on the driver, which also
+  * makes the corpus state durable, queryable, and shared with the
+  * batch/incremental paths rather than locked inside a streaming
+  * checkpoint. The takedown heal ([[readjudicate]]) decides through the
+  * same steps.
   *
   * Decision semantics per arriving document (matching the golden
   * oracle `streaming_decision_golden` clause for clause):
@@ -71,8 +73,7 @@ import graft.streaming.StreamingDedup.{Bands, RowsPerBand, ShingleN, SigSlots}
   *  - '''drop_tombstone''' (round 12, precedence above all tiers): the
   *    id was RETRACTED by [[delete]] and re-arrived — rejected by
   *    policy, admitted nowhere, keeper_id = itself (there is no
-  *    matched member). Id-scoped; disable via
-  *    `enforceTombstones = false` on [[processBatch]].
+  *    matched member). Id-scoped.
   *
   * Precedence is exact > near > semantic > quality — the order a
   * pipeline runs
@@ -100,9 +101,11 @@ import graft.streaming.StreamingDedup.{Bands, RowsPerBand, ShingleN, SigSlots}
   * O(batch × cap), never O(corpus). A trigger collects three things to
   * the driver, each bounded by the batch: the KEY SETS (every
   * arrival's hash, signature and band keys, cell and vector — one row
-  * per arrival), the per-tier KEEPER MAPS with the touched keys' stored
-  * counts (at most one entry per arrival, touched key or batch row),
-  * and the VERDICT (one row per arrival). The verdict and every
+  * per arrival), the per-tier MATCHES with the touched keys' stored
+  * counts (each arrival's matching stored members — at most one per
+  * stored row of its touched keys, so bounded by the caps — one count
+  * per touched key, one entry per batch row already stored), and the
+  * VERDICT (one row per arrival). The verdict and every
   * admission are assembled there and written from one partition each,
   * so a trigger runs a fixed handful of Spark jobs whatever the batch
   * holds. The cluster merge ([[graft.ext.ComponentStore.merge]], when
@@ -158,15 +161,6 @@ object StreamingDecision {
   private def bktOf(c: org.apache.spark.sql.Column, b: Int) =
     pmod(hash(c), lit(b))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame = {
-    val fs = StoreMeta.fs(spark, dir)
-    if (fs.exists(new Path(dir)))
-      spark.read.schema(schema).parquet(dir)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-  }
-
   private def writeMeta(spark: SparkSession, path: String, buckets: Int): Unit =
     StoreMeta.writeBucketMeta(spark, path, FormatVersion, buckets)
 
@@ -211,14 +205,50 @@ object StreamingDecision {
     * PATH_NOT_FOUND inside the writer lease (ADVICE r12) — a
     * retraction against a ledgerless store is then a clean no-op. */
   def decisionsRaw(spark: SparkSession, path: String): DataFrame =
-    readOrEmpty(spark, s"$path/decisions", decisionsSchema)
+    if (StoreMeta.fs(spark, path).exists(new Path(s"$path/decisions")))
+      spark.read.schema(decisionsSchema).parquet(s"$path/decisions")
+    else local(spark, Nil, decisionsSchema)
+
+  /** Rewrite, in place, every ledger partition holding a row of `ids`
+    * (a frame of `doc_id`): those rows go and `rows` (decision rows, each
+    * landing in its own `batch` partition) come in. EVERY partition
+    * holding such a row is rewritten — an uncheckpointed restart can
+    * leave a doc's duplicate rows in OTHER namespaces' partitions, and a
+    * stale duplicate still naming a tombstoned keeper must not survive —
+    * and one left without rows is deleted, which dynamic overwrite cannot
+    * do. */
+  private def patchLedger(spark: SparkSession, path: String, lease: StoreMeta.Lease,
+      ids: DataFrame, rows: Seq[Row]): Unit = {
+    val raw = decisionsRaw(spark, path).withColumn("batch", col("batch").cast("string"))
+    val touchedB = raw.join(broadcast(ids), Seq("doc_id"), "left_semi")
+      .select("batch").distinct().collect().map(_.getString(0))
+    if (touchedB.nonEmpty || rows.nonEmpty) {
+      val patched = raw.filter(col("batch").isin(touchedB: _*))
+        .join(broadcast(ids), Seq("doc_id"), "left_anti")
+        .unionByName(local(spark, rows, decisionsSchema)).localCheckpoint(true)
+      StoreMeta.verifyLease(spark, lease)
+      if (!patched.isEmpty)
+        patched.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch").parquet(s"$path/decisions")
+      val nonEmpty = patched.select("batch").distinct()
+        .collect().map(_.getString(0)).toSet
+      val fs = StoreMeta.fs(spark, path)
+      touchedB.filterNot(nonEmpty).foreach { bk =>
+        val dir = new Path(s"$path/decisions/batch=$bk")
+        if (fs.exists(dir)) fs.delete(dir, true): Unit
+      }
+    }
+  }
 
   // ----------------------------------------------------------------
   // RETRACTION (VERDICT r11 #1): takedown support for the decision
   // surface. delete() purges the deleted docs' store rows + ledger
   // rows and names the docs the deletion invalidates; readjudicate()
   // re-verdicts those docs IN THEIR ORIGINAL ARRIVAL ORDER against
-  // the healed stores. The composition is oracle-pinned
+  // the healed stores, through processBatch's own keys job, slice
+  // probe and verdict (only its near/semantic member choice and its
+  // admissions differ). The composition is oracle-pinned
   // (`dedup_retraction`): decisions after delete + readjudicate are
   // hash-equal to a from-scratch run over the corpus minus the
   // deleted docs — EXACTLY when the admission caps were not binding
@@ -313,25 +343,7 @@ object StreamingDecision {
           "leaving the writer lease to TTL-expire; resolve the wedged job " +
           "and re-run the takedown under a fresh lease"))): Unit
 
-    // ledger purge: patch the touched batch partitions in place
-    val touchedB = raw.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select("batch").distinct().collect().map(_.getString(0))
-    if (touchedB.nonEmpty) {
-      val slice = raw.filter(col("batch").isin(touchedB: _*))
-      val kept = slice.join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      StoreMeta.verifyLease(spark, lease)
-      if (!kept.isEmpty)
-        kept.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(s"$path/decisions")
-      val nonEmpty = kept.select("batch").distinct()
-        .collect().map(_.getString(0)).toSet
-      touchedB.filterNot(nonEmpty).foreach { bk =>
-        val dir = new Path(s"$path/decisions/batch=$bk")
-        if (fs.exists(dir)) fs.delete(dir, true): Unit
-      }
-    }
+    patchLedger(spark, path, lease, ids, Nil)
     ids.write.mode("append").parquet(s"$path/tombstones")
     affected
     }
@@ -349,19 +361,25 @@ object StreamingDecision {
     * joined back by the caller, who owns the corpus) and `batchCol`
     * carrying each doc's ORIGINAL batch key from delete()'s result.
     *
-    * One pass reproduces the sequential replay: every tier's match is
-    * restricted to members whose FIRST-ARRIVAL epoch (from the ledger)
-    * precedes the re-fed doc's own epoch — so a re-fed doc from batch
-    * 3 can claim (and be claimed by) exactly what a from-scratch run
-    * at batch 3 would have seen, including other re-fed docs via their
-    * still-stored band/cell rows. Hash ownership transfers to the
-    * earliest surviving arrival per orphaned hash (ties broken by id —
-    * the in-batch ownership rule) and is ADMITTED into the store; band
-    * and cell rows of re-fed docs are already stored, so no other
-    * admission is needed. The re-fed docs' ledger rows are patched IN
-    * their original batch partitions — afterwards the ledger looks
-    * exactly like a from-scratch run's (same partitions, same rows),
-    * so retractions compose. Returns the new decision rows. */
+    * The heal runs [[processBatch]]'s own steps over the re-fed docs:
+    * the keys job, the one-job slice probe and the driver-side verdict,
+    * with the same settings a trigger takes. A doc delete() named in
+    * several namespaces (an uncheckpointed restart) is judged once, as
+    * its first-arrival replica: min (epoch, batch). One pass reproduces
+    * the sequential replay because the near and semantic tiers claim the
+    * smallest matching member whose FIRST-ARRIVAL epoch in the ledger
+    * (read for the candidate members only) precedes the doc's own, never
+    * the doc itself — exactly what a from-scratch run at the doc's batch
+    * would have seen, other re-fed docs included via their still-stored
+    * band/cell rows. The exact tier is a trigger's: a stored owner that
+    * is not a re-fed doc of the hash, else the hash's batch owner (the
+    * earliest re-fed arrival, ties by id); an orphaned hash's batch owner
+    * is ADMITTED as its owner by a trigger's hashes admission. Band and
+    * cell rows of re-fed docs are already stored, so nothing else is
+    * admitted. The re-fed docs' ledger rows are patched IN their original
+    * batch partitions — afterwards the ledger looks exactly like a
+    * from-scratch run's (same partitions, same rows), so retractions
+    * compose. Returns the new decision rows. */
   def readjudicate(docs: DataFrame, idCol: String, textCol: String,
       embCol: Option[String], batchCol: String, path: String,
       centroids: Seq[(Long, Array[Double])],
@@ -373,170 +391,42 @@ object StreamingDecision {
       tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         TextOps.tokens): DataFrame = {
     val spark = docs.sparkSession
+    val phase = new Phases("readjudicate")
     val b = buckets(spark, path)
-    val semOn = embCol.nonEmpty && centroids.nonEmpty
-    val baseCols = Seq(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text"), col(batchCol).cast("string").as("batch"),
-      epochOf(col(batchCol)).as("ep")) ++ embCol.map(c => col(c).as("embedding"))
-    // one row per doc, keeping the MINIMUM-epoch (first-arrival) copy —
-    // delete() hands back one (doc, batch) row per duplicate namespace
-    // after an uncheckpointed restart, and an arbitrary dropDuplicates
-    // pick would make the healed verdict depend on which replica won
-    // (an epoch-0 replica sees no earlier members at all). Min-epoch is
-    // the same first-arrival discipline ledgerEp applies to members.
-    val inW = Window.partitionBy(col("doc_id"))
-      .orderBy(col("ep").asc, col("batch").asc)
-    val in = docs.select(baseCols: _*)
-      .withColumn("__rn", row_number().over(inW))
-      .filter(col("__rn") === 1).drop("__rn")
-      .persist()
-    val extraCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      if (in.isEmpty)
-        in.select("doc_id").withColumn("decision", lit(""))
-          .withColumn("keeper_id", col("doc_id")).withColumn("batch", lit(""))
-      else StoreMeta.withWriterLeaseFenced(spark, path, "readjudicate") { lease =>
-      // first-arrival epoch per ledger doc — the member-ordering map
-      val ledgerEp = decisionsRaw(spark, path)
-        .select(col("doc_id").as("m_id"), epochOf(col("batch")).as("m_ep"))
-        .groupBy("m_id").agg(min("m_ep").as("m_ep"))
-
-      // ---- exact tier --------------------------------------------
-      val bh = in.select(col("doc_id"), col("ep"),
-          Dedup.contentHashWith(tok)(col("text")).as("h"))
-        .withColumn("bkt", bktOf(col("h"), b))
-      val storedH = readOrEmpty(spark, s"$path/hashes/data", hashesSchema)
-      val ownerHits = storedH
-        .join(broadcast(bh.select("bkt", "h").distinct()), Seq("bkt", "h"), "left_semi")
-        .join(broadcast(bh.select(col("h"), col("doc_id").as("owner_id"))),
-          Seq("h", "owner_id"), "left_anti")
-        .select(col("h"), col("owner_id"))
-      val groupOwn = bh.groupBy("h")
-        .agg(min(struct(col("ep"), col("doc_id"))).as("fa"))
-        .select(col("h"), col("fa.doc_id").as("batch_owner"))
-      val ex = bh
-        .join(broadcast(ownerHits), Seq("h"), "left")
-        .join(groupOwn, Seq("h"))
-        .select(col("doc_id"),
-          coalesce(col("owner_id"),
-            when(col("batch_owner") =!= col("doc_id"), col("batch_owner")))
-            .as("ex_keeper"))
-
-      // ---- near tier ---------------------------------------------
-      val exdIn = Dedup.shingleRows(in, "doc_id", "text", ShingleN, tok)
-      val projIn = Dedup.minhashFromShingles(exdIn, "doc_id", SigSlots, Bands, RowsPerBand)
-      val bandIn = projIn
-        .select(col("doc_id"), col("sig"), explode(col("bands")).as("bk"))
-        .withColumn("bkt", bktOf(col("bk"), b))
-        .join(in.select("doc_id", "ep"), Seq("doc_id"))
-        .persist()
-      extraCached += bandIn // unpersisted in finally, failure paths included
-      val storedB = readOrEmpty(spark, s"$path/bands/data", bandsSchema)
-      val memberRows = storedB
-        .join(broadcast(bandIn.select("bkt", "bk").distinct()), Seq("bkt", "bk"), "left_semi")
-        .select(col("bkt"), col("bk"), col("doc_id").as("m_id"), col("sig").as("m_sig"))
-      val nearK = memberRows
-        .join(ledgerEp, Seq("m_id"), "left")
-        .join(broadcast(bandIn), Seq("bkt", "bk"))
-        .filter(col("m_ep").isNotNull && col("m_ep") < col("ep") &&
-          col("m_id") =!= col("doc_id"))
-        .withColumn("n_sig_match",
-          size(filter(zip_with(col("sig"), col("m_sig"), (x, y) => x === y),
-            v => v)))
-        .filter(col("n_sig_match") >= minSigMatch)
-        .groupBy("doc_id").agg(min("m_id").as("near_keeper"))
-
-      // ---- semantic tier -----------------------------------------
-      val semK =
-        if (semOn) {
-          val asgIn = StreamingDedup.withSemCell(
-              in.filter(col("embedding").isNotNull), "doc_id", "embedding", centroids)
-            .select(col("vecId").as("doc_id"), col("cell"), col("emb"), col("nrm"))
-            .join(in.select("doc_id", "ep"), Seq("doc_id"))
-          val storedC = readOrEmpty(spark, s"$path/cells/data", cellsSchema)
-          storedC
-            .join(broadcast(asgIn.select("cell").distinct()), Seq("cell"), "left_semi")
-            .select(col("cell"), col("vec_id").as("m_id"), col("emb").as("m_emb"),
-              col("nrm").as("m_nrm"))
-            .join(ledgerEp, Seq("m_id"), "left")
-            .join(broadcast(asgIn), Seq("cell"))
-            .filter(col("m_ep").isNotNull && col("m_ep") < col("ep") &&
-              col("m_id") =!= col("doc_id"))
-            .withColumn("score_e4",
-              round(GraftFunctions.vectorDot(col("emb"), col("m_emb"))
-                / (col("nrm") * col("m_nrm")) * lit(10000.0)).cast("long"))
-            .filter(col("score_e4") >= minScoreE4)
-            .groupBy("doc_id").agg(min("m_id").as("sem_keeper"))
-        } else
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(StructField("doc_id", LongType),
-              StructField("sem_keeper", LongType))))
-
-      // ---- verdict + hash-ownership transfer + ledger patch ------
-      // quality tier for healed verdicts (round 14): the same map-only
-      // scoring processBatch applies — a re-fed junk doc whose keeper
-      // was taken down must heal to drop_quality, not keep, under a
-      // quality-gated deployment
-      val qFailR: DataFrame =
-        qualityFailSet(in.select("doc_id", "text"), qualityFits, qualityStop,
-          qualityLm, qualityLmBroadcast, tok)
-      val dec = in.select("doc_id", "batch")
-        .join(broadcast(ex), Seq("doc_id"), "left")
-        .join(broadcast(nearK), Seq("doc_id"), "left")
-        .join(broadcast(semK), Seq("doc_id"), "left")
-        .join(broadcast(qFailR), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("ex_keeper").isNotNull, lit("drop_exact"))
-            .when(col("near_keeper").isNotNull, lit("drop_near"))
-            .when(col("sem_keeper").isNotNull, lit("drop_semantic"))
-            .when(col("q_fail").isNotNull, lit("drop_quality"))
-            .otherwise(lit("keep")).as("decision"),
-          coalesce(col("ex_keeper"), col("near_keeper"), col("sem_keeper"),
-            col("doc_id")).as("keeper_id"),
-          col("batch"))
-        .localCheckpoint(true)
-
-      // orphaned hashes get their earliest surviving arrival as owner
-      val storedTouchedH = storedH
-        .join(broadcast(bh.select("bkt", "h").distinct()), Seq("bkt", "h"), "left_semi")
-        .select("bkt", "h")
-      val newH = bh.join(groupOwn, Seq("h"))
-        .filter(col("doc_id") === col("batch_owner"))
-        .select(col("h"), col("doc_id").as("owner_id"), col("bkt"))
-        .join(broadcast(storedTouchedH), Seq("bkt", "h"), "left_anti")
-      appendTable(newH, s"$path/hashes", Seq("bkt"))
-
-      val raw = decisionsRaw(spark, path)
-        .withColumn("batch", col("batch").cast("string"))
-      // touched partitions = every partition holding ANY row of a
-      // re-fed doc — not just the batches the new rows land in: an
-      // uncheckpointed restart can leave duplicate rows for the same
-      // doc in OTHER namespaces' partitions, and a stale duplicate
-      // still naming the tombstoned keeper must not survive the heal
-      val touchedB = raw
-        .join(broadcast(dec.select("doc_id")), Seq("doc_id"), "left_semi")
-        .select("batch").distinct().collect().map(_.getString(0))
-      val kept = raw.filter(col("batch").isin(touchedB: _*))
-        .join(broadcast(dec.select("doc_id")), Seq("doc_id"), "left_anti")
-        .select("doc_id", "decision", "keeper_id", "batch")
-      val patched = kept.unionByName(dec).localCheckpoint(true)
-      StoreMeta.verifyLease(spark, lease)
-      if (!patched.isEmpty)
-        patched.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(s"$path/decisions")
-      // a partition whose every row was a stale duplicate gets no
-      // rows back — dynamic overwrite can't clear it, delete explicitly
-      val nonEmpty = patched.select("batch").distinct()
-        .collect().map(_.getString(0)).toSet
-      val fsd = StoreMeta.fs(spark, path)
-      touchedB.filterNot(nonEmpty).foreach { bk =>
-        val dir = new Path(s"$path/decisions/batch=$bk")
-        if (fsd.exists(dir)) fsd.delete(dir, true): Unit
-      }
-      dec.select("doc_id", "decision", "keeper_id", "batch")
-      }
-    } finally { in.unpersist(); extraCached.foreach(_.unpersist()); () }
+    val in = docsOf(docs, idCol, textCol, embCol, col(batchCol).cast("string").as("batch"))
+    val arrivals = phase("keys")(keys(in, lit(false), col("batch"), b,
+        embCol.nonEmpty && centroids.nonEmpty, centroids, tok))
+      .groupBy(_.id).values.map(_.minBy(a => (a.ep, Option(a.batch)))).toSeq
+    if (arrivals.isEmpty) local(spark, Nil, decisionsSchema)
+    else StoreMeta.withWriterLeaseFenced(spark, path, "readjudicate") { lease =>
+      val qFail =
+        if (qualityFits.isEmpty) Set.empty[Long]
+        else phase("quality")(qualityFails(in, qualityFits, qualityStop, qualityLm,
+          qualityLmBroadcast, tok))
+      val (hashes, nearP, semP) = probe(spark, path, arrivals, minSigMatch, minScoreE4, phase)
+      // first-arrival epoch of every member a re-fed doc matched
+      val cands = (nearP.hits.keySet ++ semP.hits.keySet).collect { case (d, m) if d != m => m }
+      val memberEp: Map[Long, Long] =
+        if (cands.isEmpty) Map.empty
+        else phase("member-epochs") {
+          decisionsRaw(spark, path).filter(col("doc_id").isin(cands.toSeq: _*))
+            .select(col("doc_id"), epochOf(col("batch"))).collect().toSeq
+            .collect { case r if !r.isNullAt(1) => r.getLong(0) -> r.getLong(1) }
+            .groupMapReduce(_._1)(_._2)(math.min)
+        }
+      def earlier(p: Probe)(a: Arrival): Option[Long] =
+        p.members.getOrElse(a.id, Nil).map(_._1)
+          .filter(m => m != a.id && memberEp.get(m).exists(e => a.ep.exists(e < _))).minOption
+      val owners = batchOwners(arrivals)
+      val rows = verdicts(arrivals, owners, hashes, earlier(nearP), earlier(semP), qFail)
+        .map { case (a, decision, keeper) => Row(a.id, decision, keeper, a.batch) }
+      val admit = hashAdmits(owners, hashes)
+      if (admit.nonEmpty) phase("admit-hashes")(appendTable(
+        local(spark, admit, hashesSchema).coalesce(1), s"$path/hashes", Seq("bkt")))
+      val dec = local(spark, rows, decisionsSchema)
+      phase("ledger-patch")(patchLedger(spark, path, lease, dec.select("doc_id"), rows))
+      dec
+    }
   }
 
   /** RETRACTION step 3 (optional cluster heal): rebuild the persisted
@@ -553,7 +443,7 @@ object StreamingDecision {
       "doc_id", "keeper_id", clusterPath)
   }
 
-  /** The quality-tier fail set over arrivals (doc_id, q_fail=1):
+  /** The quality-tier fail set over arrivals `in` (doc_id, text):
     * map-only scoring of the four per-doc features with the caller's
     * fitted literal weights — or, when `qualityLm` is given, the FULL
     * 5-feature batch score: x5 joins the BROADCAST vocabulary-sized
@@ -567,62 +457,124 @@ object StreamingDecision {
     * this (ADVICE r15) the stream silently KEPT them, an undocumented
     * stream/batch divergence that only looked closed because html
     * extraction happens to guarantee ≥ 3 tokens on the fixtures.
-    * Empty `qualityFits` disables the tier. */
-  private def qualityFailSet(in: DataFrame,
+    * Collected to the driver; callers skip the tier on empty
+    * `qualityFits`. */
+  private def qualityFails(in: DataFrame,
       qualityFits: Seq[graft.ext.QualityClassifier.FeatureFit],
       qualityStop: Seq[String],
       qualityLm: Option[graft.ext.QualityClassifier.LmModel],
       qualityLmBroadcast: Boolean,
-      tok: Column => Column): DataFrame = {
-    val spark = in.sparkSession
-    if (qualityFits.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("q_fail", IntegerType))))
-    else {
-      import graft.ext.QualityClassifier
-      val base = QualityClassifier.withLocalFeatures(
-        in.select("doc_id", "text"), "text", qualityStop, ShingleN, tok)
-      val (feats, cols) = qualityLm match {
-        case Some(lm) =>
-          require(qualityFits.size == QualityClassifier.FeatureCols.size,
-            s"qualityLm requires ${QualityClassifier.FeatureCols.size} fitted features (x1..x5)")
-          (base.join(
-            QualityClassifier.withLmFeature(base.filter(col("__q_has")),
-              "doc_id", "__toks", lm, broadcastLm = qualityLmBroadcast),
-            Seq("doc_id"), "left"), QualityClassifier.FeatureCols)
-        case None => (base, QualityClassifier.LocalFeatureCols)
-      }
-      QualityClassifier.score(feats, qualityFits, cols)
-        .filter(!col("__q_has") || col("score_e6") < 0L)
-        .select(col("doc_id"), lit(1).as("q_fail"))
+      tok: Column => Column): Set[Long] = {
+    import graft.ext.QualityClassifier
+    val base = QualityClassifier.withLocalFeatures(
+      in.select("doc_id", "text"), "text", qualityStop, ShingleN, tok)
+    val (feats, cols) = qualityLm match {
+      case Some(lm) =>
+        require(qualityFits.size == QualityClassifier.FeatureCols.size,
+          s"qualityLm requires ${QualityClassifier.FeatureCols.size} fitted features (x1..x5)")
+        (base.join(
+          QualityClassifier.withLmFeature(base.filter(col("__q_has")),
+            "doc_id", "__toks", lm, broadcastLm = qualityLmBroadcast),
+          Seq("doc_id"), "left"), QualityClassifier.FeatureCols)
+      case None => (base, QualityClassifier.LocalFeatureCols)
     }
+    QualityClassifier.score(feats, qualityFits, cols)
+      .filter(!col("__q_has") || col("score_e6") < 0L)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
   }
 
+  /** `[dec-phase]` timing of one call's phases under `GRAFT_TIMING` (or
+    * the `graft.timing` property): each phase's time and its start
+    * within the call, so the log shows which phases overlap. */
+  private final class Phases(key: String) {
+    private val t0 = System.nanoTime()
+    def apply[A](label: String)(f: => A): A =
+      if (sys.props.contains("graft.timing") || sys.env.contains("GRAFT_TIMING")) {
+        val s = System.nanoTime(); val r = f
+        System.err.println(f"[dec-phase] $key $label: ${(System.nanoTime() - s) / 1e9}%.2f s" +
+          f" (from +${(s - t0) / 1e9}%.2f s)"); r
+      } else f
+  }
+
+  /** The documents of `df` as (doc_id, text, embedding?, extra…); a row
+    * without an id can be neither decided nor admitted, so it is
+    * skipped. */
+  private def docsOf(df: DataFrame, idCol: String, textCol: String,
+      embCol: Option[String], extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).cast("long").as("doc_id"), col(textCol).as("text")) ++
+        embCol.map(c => col(c).as("embedding")) ++ extra: _*)
+      .filter(col("doc_id").isNotNull)
+
   /** One arrival's batch-derived keys, collected to the driver: its
-    * content hash, MinHash signature and band keys (absent without
-    * shingle support), and its coarse cell with the vector (absent
-    * without an embedding or with the semantic tier off), each store
-    * key with the `bkt` it lives under. */
-  private final case class Arrival(id: Long, tomb: Boolean, h: String, hBkt: Int,
-      sig: Seq[Long], bands: Seq[(String, Int)],
+    * batch key and that key's epoch, its content hash, MinHash signature
+    * and band keys (absent without shingle support), and its coarse
+    * cell with the vector (absent without an embedding or with the
+    * semantic tier off), each store key with the `bkt` it lives under. */
+  private final case class Arrival(id: Long, tomb: Boolean, batch: String, ep: Option[Long],
+      h: String, hBkt: Int, sig: Seq[Long], bands: Seq[(String, Int)],
       cell: Option[Long], emb: Seq[Float], nrm: Double)
 
-  /** What one tier's touched store slice says about a batch: `keeper`,
-    * the smallest matching stored member per arrival; `stored`, the
-    * stored row count per touched key; `present`, the batch's own
-    * (key, id) rows already stored (a replay's, or an earlier attempt's
-    * — excluded from matching and never inserted again). Every part is
-    * bounded by the batch: one entry per arrival, touched key, or batch
-    * row. */
-  private final case class Probe(keeper: Map[Long, Long], stored: Map[Any, Int],
+  /** The keys job: every arrival's [[Arrival]] in ONE job, all map-only
+    * over `in` ([[docsOf]]), tokenized once. `tomb` flags a retracted
+    * id; `batch` is the arrival's batch key, its epoch computed here by
+    * [[epochOf]] (null without trailing digits). The signature is the
+    * per-row MinHash form (Dedup.minhashSigOnce), equal value for value
+    * to the explode → min aggregate; band keys exist only with shingle
+    * support (size(tokens) ≥ ShingleN). */
+  private def keys(in: DataFrame, tomb: Column, batch: Column, b: Int, semOn: Boolean,
+      centroids: Seq[(Long, Array[Double])], tok: Column => Column): Seq[Arrival] = {
+    val semCols =
+      if (semOn) Seq(when(col("embedding").isNotNull, col("cell")).as("cell"),
+        col("emb"), col("nrm"))
+      else Seq(lit(null).cast(LongType).as("cell"),
+        lit(null).cast(ArrayType(FloatType)).as("emb"), lit(null).cast(DoubleType).as("nrm"))
+    (if (semOn) StreamingDedup.withSemCell(in, "doc_id", "embedding", centroids) else in)
+      .select(Seq(col("doc_id"), tomb.as("tomb"), batch.as("batch"), epochOf(batch).as("ep"),
+        tok(col("text")).as("toks")) ++ semCols: _*)
+      .withColumn("h", Dedup.contentHashWith(identity)(col("toks")))
+      .withColumn("sig", when(size(col("toks")) >= ShingleN,
+        Dedup.minhashSigOnce(TextOps.shingles(col("toks"), ShingleN), SigSlots)))
+      .withColumn("bands", when(col("sig").isNotNull,
+        Dedup.lshBandKeys(col("sig"), Bands, RowsPerBand)))
+      .select(col("doc_id"), col("tomb"), col("batch"), col("ep"), col("h"), bktOf(col("h"), b),
+        col("sig"), col("bands"), transform(col("bands"), bk => bktOf(bk, b)),
+        col("cell"), col("emb"), col("nrm"))
+      .collect().toSeq.map { r =>
+        def seq[A](i: Int): Seq[A] = if (r.isNullAt(i)) Nil else r.getSeq[A](i)
+        val vec = !r.isNullAt(9)
+        Arrival(r.getLong(0), r.getBoolean(1), r.getString(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getString(4), r.getInt(5),
+          seq[Long](6), seq[String](7).zip(seq[Int](8)),
+          if (vec) Some(r.getLong(9)) else None, if (vec) seq[Float](10) else Nil,
+          if (vec) r.getDouble(11) else 0.0)
+      }
+  }
+
+  /** What one tier's touched store slice says about a batch: `hits`,
+    * every (arrival, matching stored member) pair, `true` when each of
+    * the member's matching rows is one of the batch's own (at most
+    * `Bands` × `maxBucket` near members per arrival); `stored`, the
+    * stored row count per touched key; `present`, the batch's own (key,
+    * id) rows already stored (a replay's, an earlier attempt's, or a
+    * re-fed doc's — never inserted again). Every part is bounded by the
+    * batch and the caps. */
+  private final case class Probe(hits: Map[(Long, Long), Boolean], stored: Map[Any, Int],
       present: Set[(Any, Long)]) {
     def ++(o: Probe): Probe = Probe(
-      o.keeper.foldLeft(keeper) { case (acc, (d, m)) =>
-        acc.updated(d, acc.get(d).fold(m)(math.min(_, m))) },
+      o.hits.foldLeft(hits) { case (acc, (dm, own)) =>
+        acc.updated(dm, acc.get(dm).fold(own)(_ && own)) },
       o.stored.foldLeft(stored) { case (acc, (k, n)) =>
         acc.updated(k, acc.getOrElse(k, 0) + n) },
       present ++ o.present)
+
+    /** Each arrival's matching members, with their `hits` flag. */
+    lazy val members: Map[Long, Seq[(Long, Boolean)]] =
+      hits.toSeq.groupMap(_._1._1) { case ((_, m), own) => m -> own }
+
+    /** The smallest matching member that is not one of the batch's own
+      * rows: a trigger's keeper for this tier. */
+    def keeper(d: Long): Option[Long] =
+      members.getOrElse(d, Nil).collect { case (m, false) => m }.minOption
   }
   private val NoProbe = Probe(Map.empty, Map.empty, Set.empty)
 
@@ -656,42 +608,105 @@ object StreamingDecision {
             exists(col("__b"), r => r("_1") === col(idCol)),
             transform(filter(col("__b"), hit), r => r("_1")))
           .rdd.mapPartitions { rows =>
-            val keeper = mutable.HashMap.empty[Long, Long]
+            val hits = mutable.HashMap.empty[(Long, Long), Boolean]
             val stored = mutable.HashMap.empty[Any, Int]
             val present = mutable.HashSet.empty[(Any, Long)]
             rows.foreach { r =>
-              val (key, m) = (r.get(0), r.getLong(1))
+              val (key, m, own) = (r.get(0), r.getLong(1), r.getBoolean(2))
               stored(key) = stored.getOrElse(key, 0) + 1
-              if (r.getBoolean(2)) present += key -> m
-              else r.getSeq[Long](3).foreach(d => keeper(d) = math.min(keeper.getOrElse(d, m), m))
+              if (own) present += key -> m
+              r.getSeq[Long](3).foreach(d => hits((d, m)) = hits.get((d, m)).fold(own)(_ && own))
             }
-            Iterator(Probe(keeper.toMap, stored.toMap, present.toSet))
+            Iterator(Probe(hits.toMap, stored.toMap, present.toSet))
           }
         Some(Slice(folded, bc))
       } catch { case e: Throwable => bc.destroy(); throw e }
     }
 
-  /** Plan every tier's slice read at once — each `plans` entry is a
-    * labelled [[slice]] call, and the plans share nothing: a file index,
-    * UDFs over the slice's own broadcast, `.rdd` planning —, then read
-    * every slice ONCE, all in ONE Spark job (their partitions are
-    * scheduled together), and merge each tier's partition results on
-    * the driver: one [[Probe]] per tier, in order. The verdict and that
-    * tier's admission both derive from it. Every broadcast a plan made
-    * is destroyed on the way out, a failed sibling plan's included. */
-  private def probe(spark: SparkSession,
-      plans: Seq[(String, () => Option[Slice])]): Seq[Probe] = {
-    val planned = new java.util.concurrent.ConcurrentLinkedQueue[Slice]()
-    try {
-      val tiers = concurrently(plans.map { case (label, plan) =>
-        label -> (() => { val s = plan(); s.foreach(planned.add); s })
-      })
-      val tagged = tiers.zipWithIndex.collect { case (Some(s), i) => s.folded.map(i -> _) }
-      val got = if (tagged.isEmpty) Array.empty[(Int, Probe)]
-        else spark.sparkContext.union(tagged).collect()
-      tiers.indices.map(i => got.collect { case (`i`, p) => p }.foldLeft(NoProbe)(_ ++ _))
-    } finally planned.asScala.foreach(_.batch.destroy())
-  }
+  /** The `live` arrivals' rows of the bands table: (band key, its `bkt`,
+    * arrival). */
+  private def bandRowsOf(live: Seq[Arrival]): Seq[(String, Int, Arrival)] =
+    for (a <- live; (bk, bkt) <- a.bands) yield (bk, bkt, a)
+
+  /** Read the three touched store slices of the `live` arrivals —
+    * hashes, bands, cells — each ONCE, all in ONE Spark job, and merge
+    * each tier's partition results on the driver into one [[Probe]].
+    * The three plans share nothing (a file index, UDFs over the slice's
+    * own broadcast, `.rdd` planning) and are built at once. Replay
+    * guards are by stored-row IDENTITY — (h, owner), (bk, doc_id),
+    * (cell, vec_id): a stored row that is one of the batch's own rows
+    * is flagged, but an id re-arriving with DIFFERENT content must not
+    * suppress that id's old rows (a bare-id guard would let a true
+    * duplicate of its old content through as 'keep'). Every broadcast a
+    * plan made is destroyed on the way out, a failed sibling plan's
+    * included. */
+  private def probe(spark: SparkSession, path: String, live: Seq[Arrival],
+      minSigMatch: Int, minScoreE4: Long, phase: Phases): (Probe, Probe, Probe) =
+    phase("probe") {
+      val bandRows = bandRowsOf(live)
+      val vecs = live.filter(_.cell.nonEmpty)
+      val planned = new java.util.concurrent.ConcurrentLinkedQueue[Slice]()
+      def plan(table: String)(s: => Option[Slice]) =
+        s"plan-$table" -> (() => phase(s"plan-$table") { val r = s; r.foreach(planned.add); r })
+      try {
+        val tiers = concurrently(Seq(
+          plan("hashes")(slice(spark, s"$path/hashes/data", hashesSchema, "bkt",
+            live.map(_.hBkt).distinct, "h", "owner_id",
+            live.groupBy(_.h).map { case (h, as) => h -> as.map(a => Tuple1(a.id)) })(_ => lit(true))),
+          plan("bands")(slice(spark, s"$path/bands/data", bandsSchema, "bkt",
+            bandRows.map(_._2).distinct, "bk", "doc_id",
+            bandRows.groupBy(_._1).map { case (bk, rs) => bk -> rs.map(r => (r._3.id, r._3.sig)) }) {
+            r => size(filter(zip_with(r("_2"), col("sig"), (x, y) => x === y), v => v)) >=
+              minSigMatch
+          }),
+          plan("cells")(slice(spark, s"$path/cells/data", cellsSchema, "cell",
+            vecs.map(_.cell.get).distinct, "cell", "vec_id",
+            vecs.groupBy(_.cell.get).map { case (c, as) => c -> as.map(a => (a.id, a.emb, a.nrm)) }) {
+            r => round(GraftFunctions.vectorDot(r("_2"), col("emb"))
+              / (r("_3") * col("nrm")) * lit(10000.0)).cast("long") >= minScoreE4
+          })))
+        val tagged = tiers.zipWithIndex.collect { case (Some(s), i) => s.folded.map(i -> _) }
+        val got = if (tagged.isEmpty) Array.empty[(Int, Probe)]
+          else spark.sparkContext.union(tagged).collect()
+        val Seq(h, n, c) = tiers.indices.map(i =>
+          got.collect { case (`i`, p) => p }.foldLeft(NoProbe)(_ ++ _))
+        (h, n, c)
+      } finally planned.asScala.foreach(_.batch.destroy())
+    }
+
+  /** Each hash's batch owner: its first arrival by (epoch, id), a null
+    * epoch first (Spark's struct `min`); within one batch, the smallest
+    * id. */
+  private def batchOwners(live: Seq[Arrival]): Map[String, Arrival] =
+    live.groupBy(_.h).map { case (h, as) => h -> as.minBy(a => (a.ep, a.id)) }
+
+  /** The hashes admission: each batch owner of a hash no stored row
+    * owns yet — first arrival owns, and an owned hash is never
+    * re-admitted (ownership persists across the stream's lifetime). */
+  private def hashAdmits(owners: Map[String, Arrival], hashes: Probe): Seq[Row] =
+    owners.toSeq.sortBy(_._1).collect { case (h, o) if !hashes.stored.contains(h) =>
+      Row(h, o.id, o.hBkt) }
+
+  /** The verdict per arrival, by id: tombstone > exact > near > semantic
+    * > quality > keep. The exact keeper is the hash's smallest stored
+    * owner that is not one of the batch's own rows, else its batch owner
+    * when that is another arrival; `near` and `sem` give the other two
+    * tiers' keepers. keeper = exact ∨ near ∨ semantic ∨ the doc itself. */
+  private def verdicts(arrivals: Seq[Arrival], owners: Map[String, Arrival], hashes: Probe,
+      near: Arrival => Option[Long], sem: Arrival => Option[Long],
+      qFail: Set[Long]): Seq[(Arrival, String, Long)] =
+    arrivals.sortBy(_.id).map { a =>
+      if (a.tomb) (a, "drop_tombstone", a.id)
+      else {
+        val ex = hashes.keeper(a.id).orElse(Some(owners(a.h).id).filter(_ != a.id))
+        val (n, s) = (near(a), sem(a))
+        val decision =
+          if (ex.nonEmpty) "drop_exact" else if (n.nonEmpty) "drop_near"
+          else if (s.nonEmpty) "drop_semantic" else if (qFail(a.id)) "drop_quality"
+          else "keep"
+        (a, decision, ex.orElse(n).orElse(s).getOrElse(a.id))
+      }
+    }
 
   /** Run independent driver actions at once, one thread each, and
     * return their results in order; `beside` runs on the calling thread
@@ -764,7 +779,6 @@ object StreamingDecision {
       minSigMatch: Int = 8, maxBucket: Int = 64,
       minScoreE4: Long = 3000L, maxCell: Int = 64,
       nBuckets: Int = 16, clusterPath: Option[String] = None,
-      enforceTombstones: Boolean = true,
       qualityFits: Seq[graft.ext.QualityClassifier.FeatureFit] = Nil,
       qualityStop: Seq[String] = Nil,
       qualityLm: Option[graft.ext.QualityClassifier.LmModel] = None,
@@ -772,26 +786,13 @@ object StreamingDecision {
       tok: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         TextOps.tokens): DataFrame = {
     val spark = batch.sparkSession
-    val t0 = System.nanoTime()
-    // each phase's time and its start within the call, so the log shows
-    // which phases overlap
-    def phase[A](label: String)(f: => A): A =
-      if (sys.props.contains("graft.timing") || sys.env.contains("GRAFT_TIMING")) {
-        val s = System.nanoTime(); val r = f
-        System.err.println(f"[dec-phase] $batchKey $label: ${(System.nanoTime() - s) / 1e9}%.2f s" +
-          f" (from +${(s - t0) / 1e9}%.2f s)"); r
-      } else f
+    val phase = new Phases(batchKey)
     writeMeta(spark, path, nBuckets)
     val b = buckets(spark, path)
 
-    val semOn = embCol.nonEmpty && centroids.nonEmpty
-    val baseCols = Seq(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text")) ++ embCol.map(c => col(c).as("embedding"))
     // one slot per id within a batch (at-least-once replay guard — the
-    // same in-batch dedup every stateful tier applies); a row without an
-    // id can be neither decided nor admitted, so it is skipped
-    val in0 = batch.select(baseCols: _*).filter(col("doc_id").isNotNull)
-      .dropDuplicates("doc_id")
+    // same in-batch dedup every stateful tier applies)
+    val in0 = docsOf(batch, idCol, textCol, embCol).dropDuplicates("doc_id")
     // TOMBSTONE ENFORCEMENT (round 12): a RETRACTED id re-arriving
     // after its takedown must not be silently re-admitted — it gets an
     // explicit 'drop_tombstone' verdict (keeper = itself: there is no
@@ -799,12 +800,9 @@ object StreamingDecision {
     // Takedown is ID-scoped; a different id carrying the same content
     // is a new document and is judged on its own merits. The check
     // costs one exists() per batch and reads the (takedown-sized)
-    // tombstone table only when a delete() ever ran; pass
-    // `enforceTombstones = false` to restore admit-on-rearrival.
-    val tombOn = enforceTombstones &&
-      StoreMeta.fs(spark, path).exists(new Path(s"$path/tombstones"))
+    // tombstone table only when a delete() ever ran.
     val (withTomb, tomb) =
-      if (tombOn)
+      if (StoreMeta.fs(spark, path).exists(new Path(s"$path/tombstones")))
         (in0.join(spark.read.parquet(s"$path/tombstones")
             .select(col("doc_id"), lit(true).as("__tomb")).distinct(), Seq("doc_id"), "left"),
           coalesce(col("__tomb"), lit(false)))
@@ -813,38 +811,9 @@ object StreamingDecision {
     // the batch scan and the in-batch dedup shuffle run once
     val in = if (qualityFits.nonEmpty) withTomb.persist() else withTomb
     try {
-      // ---- keys: every arrival's hash, signature, band keys and cell
-      // in ONE job, all map-only over the deduplicated batch, tokenized
-      // once. The signature is the per-row MinHash form
-      // (Dedup.minhashSigOnce), equal value for value to the explode →
-      // min aggregate; band keys exist only with shingle support
-      // (size(tokens) ≥ ShingleN).
-      val semCols =
-        if (semOn) Seq(when(col("embedding").isNotNull, col("cell")).as("cell"),
-          col("emb"), col("nrm"))
-        else Seq(lit(null).cast(LongType).as("cell"),
-          lit(null).cast(ArrayType(FloatType)).as("emb"), lit(null).cast(DoubleType).as("nrm"))
-      val arrivals = phase("keys") {
-        (if (semOn) StreamingDedup.withSemCell(in, "doc_id", "embedding", centroids) else in)
-          .select(Seq(col("doc_id"), tomb.as("tomb"), tok(col("text")).as("toks")) ++ semCols: _*)
-          .withColumn("h", Dedup.contentHashWith(identity)(col("toks")))
-          .withColumn("sig", when(size(col("toks")) >= ShingleN,
-            Dedup.minhashSigOnce(TextOps.shingles(col("toks"), ShingleN), SigSlots)))
-          .withColumn("bands", when(col("sig").isNotNull,
-            Dedup.lshBandKeys(col("sig"), Bands, RowsPerBand)))
-          .select(col("doc_id"), col("tomb"), col("h"), bktOf(col("h"), b), col("sig"),
-            col("bands"), transform(col("bands"), bk => bktOf(bk, b)),
-            col("cell"), col("emb"), col("nrm"))
-          .collect().toSeq.map { r =>
-            def seq[A](i: Int): Seq[A] = if (r.isNullAt(i)) Nil else r.getSeq[A](i)
-            val vec = !r.isNullAt(7)
-            Arrival(r.getLong(0), r.getBoolean(1), r.getString(2), r.getInt(3), seq[Long](4),
-              seq[String](5).zip(seq[Int](6)),
-              if (vec) Some(r.getLong(7)) else None, if (vec) seq[Float](8) else Nil,
-              if (vec) r.getDouble(9) else 0.0)
-          }
-      }
-      val (live, tombed) = arrivals.partition(!_.tomb)
+      val arrivals = phase("keys")(keys(in, tomb, lit(batchKey), b,
+        embCol.nonEmpty && centroids.nonEmpty, centroids, tok))
+      val live = arrivals.filterNot(_.tomb)
 
       // ---- quality tier (VERDICT r13 #2): MAP-ONLY scoring with the
       // caller's FITTED literal weights over the four per-doc features
@@ -858,58 +827,18 @@ object StreamingDecision {
       // has seen; a quality-dropped doc is still a valid dedup member.
       val qFail: Set[Long] =
         if (qualityFits.isEmpty || live.isEmpty) Set.empty
-        else phase("quality") {
-          qualityFailSet(in.filter(!tomb), qualityFits, qualityStop, qualityLm,
-            qualityLmBroadcast, tok)
-            .select("doc_id").collect().map(_.getLong(0)).toSet
-        }
+        else phase("quality")(qualityFails(in.filter(!tomb), qualityFits, qualityStop,
+          qualityLm, qualityLmBroadcast, tok))
 
-      // ---- the three touched store slices, each read once. Replay
-      // guards are by stored-row IDENTITY — (h, owner), (bk, doc_id),
-      // (cell, vec_id): a stored row that is one of the batch's own
-      // rows (a replay) claims nothing, but an id re-arriving with
-      // DIFFERENT content must not suppress that id's old rows (a
-      // bare-id guard would let a true duplicate of its old content
-      // through as 'keep').
-      val byHash = live.groupBy(_.h)
-      val bandRows = for (a <- live; (bk, bkt) <- a.bands) yield (bk, bkt, a)
-      val vecs = if (semOn) live.filter(_.cell.nonEmpty) else Nil
-      def plan(table: String)(s: => Option[Slice]) =
-        s"plan-$table" -> (() => phase(s"plan-$table")(s))
-      val Seq(hashes, nearP, semP) = phase("probe") {
-        probe(spark, Seq(
-          plan("hashes")(slice(spark, s"$path/hashes/data", hashesSchema, "bkt",
-            live.map(_.hBkt).distinct, "h", "owner_id",
-            byHash.map { case (h, as) => h -> as.map(a => Tuple1(a.id)) })(_ => lit(true))),
-          plan("bands")(slice(spark, s"$path/bands/data", bandsSchema, "bkt",
-            bandRows.map(_._2).distinct, "bk", "doc_id",
-            bandRows.groupBy(_._1).map { case (bk, rs) => bk -> rs.map(r => (r._3.id, r._3.sig)) }) {
-            r => size(filter(zip_with(r("_2"), col("sig"), (x, y) => x === y), v => v)) >=
-              minSigMatch
-          }),
-          plan("cells")(slice(spark, s"$path/cells/data", cellsSchema, "cell",
-            vecs.map(_.cell.get).distinct, "cell", "vec_id",
-            vecs.groupBy(_.cell.get).map { case (c, as) => c -> as.map(a => (a.id, a.emb, a.nrm)) }) {
-            r => round(GraftFunctions.vectorDot(r("_2"), col("emb"))
-              / (r("_3") * col("nrm")) * lit(10000.0)).cast("long") >= minScoreE4
-          })))
-      }
-
-      // ---- verdict: tombstone > exact > near > semantic > quality
-      //      > keep. Exact keeper: the stored owner, else the smallest
-      //      same-batch id with the hash ----------------------------
-      val batchOwner = byHash.map { case (h, as) => h -> as.map(_.id).min }
-      val verdict = (live.map { a =>
-        val ex = hashes.keeper.get(a.id).orElse(Some(batchOwner(a.h)).filter(_ != a.id))
-        val near = nearP.keeper.get(a.id)
-        val sem = semP.keeper.get(a.id)
-        val decision =
-          if (ex.nonEmpty) "drop_exact" else if (near.nonEmpty) "drop_near"
-          else if (sem.nonEmpty) "drop_semantic" else if (qFail(a.id)) "drop_quality"
-          else "keep"
-        Row(a.id, decision, ex.orElse(near).orElse(sem).getOrElse(a.id))
-      } ++ tombed.map(a => Row(a.id, "drop_tombstone", a.id))).sortBy(_.getLong(0))
-      val dec = local(spark, verdict, verdictSchema)
+      // ---- the three touched store slices, each read once; every
+      //      tier's keeper is its smallest matching stored member that
+      //      is not one of the batch's own rows
+      val (hashes, nearP, semP) = probe(spark, path, live, minSigMatch, minScoreE4, phase)
+      val owners = batchOwners(live)
+      val dec = local(spark,
+        verdicts(arrivals, owners, hashes, a => nearP.keeper(a.id), a => semP.keeper(a.id), qFail)
+          .map { case (a, decision, keeper) => Row(a.id, decision, keeper) },
+        verdictSchema)
 
       // ---- admission (marker-guarded, insert-if-absent) -------------
       val fs = StoreMeta.fs(spark, path)
@@ -918,19 +847,15 @@ object StreamingDecision {
       val admits: Seq[(String, Seq[Row], StructType, String)] =
         if (admitted) Nil
         else Seq(
-          // hashes: first arrival owns; an already-owned hash is never
-          // re-admitted (ownership persists across the stream's lifetime)
-          ("hashes", batchOwner.toSeq.sorted
-            .filterNot { case (h, _) => hashes.stored.contains(h) }
-            .map { case (h, o) => Row(h, o, byHash(h).head.hBkt) }, hashesSchema, "bkt"),
+          ("hashes", hashAdmits(owners, hashes), hashesSchema, "bkt"),
           // bands: sequential cap fill per band key
           ("bands",
-            capFill[(String, Int, Arrival)](bandRows, _._1, _._3.id, nearP, maxBucket)
+            capFill[(String, Int, Arrival)](bandRowsOf(live), _._1, _._3.id, nearP, maxBucket)
               .map { case ((bk, bkt, a), rank) => Row(bk, a.id, a.sig, rank, bkt) },
             bandsSchema, "bkt"),
           // cells: same sequential fill per coarse cell
           ("cells",
-            capFill[Arrival](vecs, _.cell.get, _.id, semP, maxCell)
+            capFill[Arrival](live.filter(_.cell.nonEmpty), _.cell.get, _.id, semP, maxCell)
               .map { case (a, rank) => Row(a.id, a.emb, a.nrm, rank, a.cell.get) },
             cellsSchema, "cell"))
           .filter(_._2.nonEmpty)

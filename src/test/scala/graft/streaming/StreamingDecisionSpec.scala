@@ -67,6 +67,13 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
     * writes). The bound is the larger count plus one. */
   private val JobBudget = 10
 
+  /** Spark jobs one `readjudicate` call may run, measured by the same
+    * case over re-fed docs from three batches: 12 (the keys job, the
+    * slice probe, the member-epoch read, the hashes admission and the
+    * ledger patch's reads and write). None of them is per batch. The
+    * bound is the count plus one. */
+  private val ReadjudicateBudget = 13
+
   behavior of "StreamingDecision.processBatch"
 
   it should "apply exact > near > semantic precedence at arrival time" in {
@@ -105,11 +112,9 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
     val fits = Seq(FeatureFit(-1.0, 30.0), FeatureFit(0.0, 0.0),
       FeatureFit(0.0, 0.0), FeatureFit(0.0, 0.0))
     val shortText = "five small words sit here now"
-    def decideQ(batchKey: String, rows: Seq[(Long, String, Seq[Float])],
-        enforce: Boolean = true): Map[Long, (String, Long)] =
+    def decideQ(batchKey: String, rows: Seq[(Long, String, Seq[Float])]): Map[Long, (String, Long)] =
       StreamingDecision.processBatch(df(rows), "doc_id", "text",
           Some("embedding"), store, cents, batchKey,
-          enforceTombstones = enforce,
           qualityFits = fits, qualityStop = Seq("the", "a", "of"))
         .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     val b0 = decideQ("0", Seq(
@@ -306,6 +311,28 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
       info(s"jobs per call: $j0, $j1")
       j0 should be <= JobBudget
       j1 should be <= JobBudget
+      // the takedown heal runs the same steps, so its job count does not
+      // grow with the number of batches its re-fed docs came from
+      decide(store, "2", Seq((12L, textA, oneHot(2)),
+        (22L, textB.replace("compaction", "cleanup"), oneHot(33))))
+      decide(store, "3", Seq((13L, textA, oneHot(3))))
+      import spark.implicits._
+      StreamingDecision.delete(spark, store, Seq(10L, 20L).toDF("doc_id"))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap shouldBe
+        Map(11L -> "1", 21L -> "1", 31L -> "1", 12L -> "2", 22L -> "2", 13L -> "3")
+      val refed = Seq((11L, textA, oneHot(0), "1"), (21L, textBNear, oneHot(32), "1"),
+          (31L, textD, oneHot(0), "1"), (12L, textA, oneHot(2), "2"),
+          (22L, textB.replace("compaction", "cleanup"), oneHot(33), "2"),
+          (13L, textA, oneHot(3), "3"))
+        .toDF("doc_id", "text", "embedding", "batch")
+      val jr = jobsOf(StreamingDecision.readjudicate(refed, "doc_id", "text",
+        Some("embedding"), "batch", store, cents): Unit)
+      info(s"jobs per readjudicate call: $jr")
+      jr should be <= ReadjudicateBudget
+      StreamingDecision.decisions(spark, store).filter(col("doc_id") < 20L)
+        .select("doc_id", "decision", "keeper_id").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap shouldBe
+        Map(11L -> ("keep", 11L), 12L -> ("drop_exact", 11L), 13L -> ("drop_exact", 11L))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -556,12 +583,6 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
     // it keeps and owns the hash
     val b2 = decide(store, "b2", Seq((92L, textA, oneHot(3))))
     b2(92L) shouldBe ("keep", 92L)
-    // opt-out restores admit-on-rearrival
-    val b3 = StreamingDecision.processBatch(
-        df(Seq((90L, textD, oneHot(4)))), "doc_id", "text", Some("embedding"),
-        store, cents, "b3", enforceTombstones = false)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    b3(90L) shouldBe "keep"
   }
 
   it should "order ledger epochs numerically in decisions(), not lexicographically" in {
@@ -662,6 +683,76 @@ class StreamingDecisionSpec extends AnyFlatSpec with Matchers with SparkFixture 
     graft.ext.ComponentStore.components(spark, cstore)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       Map(51L -> 51L, 52L -> 51L)
+  }
+
+  it should "heal to a from-scratch run under non-default tier settings" in {
+    import spark.implicits._
+    import graft.ext.QualityClassifier.FeatureFit
+    // every tier setting the heal takes differs from its default: the
+    // unicode token layer (the corpus mixes Latin, Cyrillic and Greek
+    // words), a looser near threshold, a stricter semantic one, and the
+    // quality tier (docs over 30 tokens fail); caps never bind here
+    val rnd = new scala.util.Random(8L)
+    def word(from: Char, span: Int) =
+      Seq.fill(3 + rnd.nextInt(5))((from + rnd.nextInt(span)).toChar).mkString
+    val vocab = Seq.fill(40)(word('a', 26)) ++ Seq.fill(40)(word('а', 32)) ++
+      Seq.fill(40)(word('α', 25))
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def swap(ws: Seq[String], i: Int) = ws.updated(i, word('а', 32))
+    def vec(parts: (Int, Float)*): Seq[Float] = {
+      val v = Array.fill(64)(0f); parts.foreach { case (i, x) => v(i) = x }; v.toSeq
+    }
+    val (te, tn, tshort) = (text(34), text(40), text(22))
+    val latinOnly = te.map(w => if (w.head <= 'z') w else word('а', 32))
+    val tn39 = swap(tn, 39)
+    // (id, words, embedding) per batch; 100 owns te, 101 is te's near
+    // keeper, 102 the semantic keeper of the e0 direction
+    val batches = Seq(
+      Seq((100L, te, vec(1 -> 1f)), (101L, tn, vec(2 -> 1f)), (102L, text(26), vec(0 -> 1f)),
+        (103L, tshort, vec(3 -> 1f)), (104L, text(36), vec(4 -> 1f))),
+      Seq((110L, te, vec(5 -> 1f)), (111L, tn39, vec(6 -> 1f)),
+        (112L, text(28), vec(0 -> 1f)), (113L, latinOnly, vec(7 -> 1f)),
+        (114L, tshort, vec(8 -> 1f))),
+      Seq((120L, te, vec(9 -> 1f)), (121L, swap(tn, 0), vec(10 -> 1f)),
+        (122L, text(24), vec(0 -> 0.9f, 63 -> 0.43589f)),
+        (123L, text(25), vec(0 -> 0.4f, 63 -> 0.91652f)), (124L, tn39, vec(11 -> 1f))),
+      Seq((130L, te, vec(12 -> 1f)), (131L, swap(tn, 20), vec(13 -> 1f)),
+        (132L, text(27), vec(0 -> 1f)), (133L, Seq("да", "ok"), vec(14 -> 1f)),
+        (134L, swap(swap(tn, 5), 30), vec(15 -> 1f))))
+      .map(_.map { case (id, ws, v) => (id, ws.mkString(" "), v) })
+    val deleted = Set(100L, 101L, 102L)
+    val fits = Seq(FeatureFit(-1.0, 30.0), FeatureFit(0.0, 0.0),
+      FeatureFit(0.0, 0.0), FeatureFit(0.0, 0.0))
+    val stop = Seq("the", "a", "of")
+    def run(store: String, drop: Set[Long]): Unit =
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        StreamingDecision.processBatch(df(rows.filterNot(r => drop(r._1))), "doc_id", "text",
+          Some("embedding"), store, cents, i.toString, minSigMatch = 6,
+          minScoreE4 = 5000L, qualityFits = fits, qualityStop = stop,
+          tok = graft.ext.TextOps.tokensU).count(): Unit
+      }
+    def verdicts(store: String) = StreamingDecision.decisions(spark, store)
+      .select("doc_id", "decision", "keeper_id", "batch")
+      .as[(Long, String, Long, String)].collect().toSet
+
+    val store = tempDir("dec-heal-settings")
+    run(store, Set.empty)
+    val before = verdicts(store)
+    // the deleted set holds an exact owner, a near keeper and a
+    // semantic keeper
+    Seq("drop_exact" -> 100L, "drop_near" -> 101L, "drop_semantic" -> 102L).foreach {
+      case (d, k) => before.exists(v => v._2 == d && v._3 == k) shouldBe true }
+    val corpus = df(batches.flatten)
+    val affected = StreamingDecision.delete(spark, store, deleted.toSeq.toDF("doc_id"))
+    StreamingDecision.readjudicate(affected.join(corpus, Seq("doc_id")), "doc_id", "text",
+      Some("embedding"), "batch", store, cents, minSigMatch = 6, minScoreE4 = 5000L,
+      qualityFits = fits, qualityStop = stop, tok = graft.ext.TextOps.tokensU)
+    val scratch = tempDir("dec-heal-settings-scratch")
+    run(scratch, deleted)
+    val healed = verdicts(store)
+    healed shouldBe verdicts(scratch)
+    healed.map(_._2) should contain allOf ("drop_exact", "drop_near", "drop_semantic",
+      "drop_quality", "keep")
   }
 
   it should "run end to end as a foreachBatch stream" in {
